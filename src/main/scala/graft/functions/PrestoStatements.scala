@@ -986,8 +986,9 @@ private[functions] object PrestoStatements {
       // operator stats). Executing THIS queryExecution's RDD (not a
       // derived write/count plan) is what populates its SQLMetrics;
       // nothing materializes driver-side. AQE wraps the tree in an
-      // AdaptiveSparkPlanExec with no visible children — unwrap to the
-      // final plan for the metric walk.
+      // AdaptiveSparkPlanExec with no visible children and query stages
+      // are leaves over their subtree; Spark's AdaptiveSparkPlanHelper
+      // walks through both.
       val qe = spark.sql(inner).queryExecution
       qe.toRdd.foreachPartition(_ => ())
       val exec = qe.executedPlan match {
@@ -995,23 +996,12 @@ private[functions] object PrestoStatements {
           a.executedPlan
         case p => p
       }
-      // AQE query stages are LEAF nodes wrapping their materialized
-      // subtree — a plain tree collect stops at them; descend through
-      // QueryStageExec.plan explicitly.
-      def walk(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
-        val kids = p match {
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            Seq(q.plan)
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            Seq(a.executedPlan)
-          case other => other.children
-        }
-        p +: kids.flatMap(walk)
-      }
-      val metrics = walk(exec).filter(_.metrics.nonEmpty).map { n =>
-        n.nodeName + ": " + n.metrics.map { case (k, m) =>
-          s"$k=${m.value}"
-        }.toSeq.sorted.mkString(", ")
+      val metrics = new org.apache.spark.sql.execution.adaptive
+          .AdaptiveSparkPlanHelper {}.collect(exec) {
+        case n if n.metrics.nonEmpty =>
+          n.nodeName + ": " + n.metrics.map { case (k, m) =>
+            s"$k=${m.value}"
+          }.toSeq.sorted.mkString(", ")
       }
       val text = exec.toString + "\n== Runtime Metrics ==\n" +
         metrics.mkString("\n")

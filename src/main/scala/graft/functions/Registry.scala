@@ -559,8 +559,7 @@ object Registry {
         "element_at(__b, i).x) THEN NOT acc ELSE acc END)"),
 
     // --- round-5 coverage-audit batch (names surfaced by diffing the
-    // reference's @ScalarFunction annotations against this registry;
-    // tools/scala/ProbeCoverage.scala) ---
+    // reference's @ScalarFunction annotations against this registry) ---
     // strrpos (StringFunctions.java): LAST occurrence, 1-based, 0 if absent
     ("strrpos", 2,
       "CASE WHEN instr(reverse(__a), reverse(__b)) = 0 THEN 0L " +

@@ -35,7 +35,7 @@ object Similarity {
     * i.e. `ceil(log2(n / target))`, floored at 1.
     *
     * Fixed plane counts are the #1 scale hazard in LSH blocking: the
-    * ProbeScale run (SURVEY §2.4) measured ~100x candidate-pair growth at
+    * scale probe (SURVEY §2.4) measured ~100x candidate-pair growth at
     * 10x corpus when bits stay constant, because occupancy doubles with
     * every corpus doubling and pair work grows with occupancy². Deriving
     * planes from n keeps occupancy — and so per-bucket pair work — flat,

@@ -842,12 +842,12 @@ object Connectors extends QueryPack {
     // DSv2, SPARK-35779, on the q1z connector): a SELECTIVE dim join's
     // build-side key values arrive at the scan as runtime In-filters
     // and prune hash buckets at EXECUTION time — the dynamic
-    // counterpart of Kudu's scan-token pruning. The gate counts rows
-    // actually scanned: with 16 buckets and ~19 surviving keys, far
-    // fewer than the full table's rows may flow (the boolean lock);
-    // the join itself replays in DuckDB.
+    // counterpart of Kudu's scan-token pruning. The gate reads its own
+    // scan's `rowsScanned` metric: with 16 buckets and ~19 surviving
+    // keys, far fewer than the full table's rows may flow (the boolean
+    // lock); the join itself replays in DuckDB.
     "q2j_kudu_runtime_pruning" -> ((s, dir) => {
-      import graft.sources.KuduStore
+      import graft.sources.{KuduStore, StoreScan}
       import org.apache.spark.sql.types._
       val tbl = s"ev_kudu_rt_${Integer.toHexString(dir.hashCode)}"
       KuduStore.drop(tbl)
@@ -868,13 +868,13 @@ object Connectors extends QueryPack {
       val joined = s.read.format("graft-kudu").option("table", tbl)
         .load()
         .join(broadcast(dim), Seq("event_id"))
-      val before = KuduStore.rowsScanned.get()
-      val agg = joined
+      val q = joined
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2)
           .as("v_sum"),
           min(col("event_id")).as("k_min"), max(col("event_id"))
-            .as("k_max")).collect()(0)
-      val scanned = KuduStore.rowsScanned.get() - before
+            .as("k_max"))
+      val agg = q.collect()(0)
+      val scanned = StoreScan.metric(q, "rowsScanned")
       import s.implicits._
       Seq((agg.getLong(0), agg.getDouble(1), agg.getLong(2),
         agg.getLong(3), scanned < total))
@@ -888,11 +888,12 @@ object Connectors extends QueryPack {
     // join probe from its term index, so only matching documents
     // materialize (the search-index counterpart of Kudu's runtime
     // tablet pruning, q2j; beyond the reference, which has no dynamic
-    // filtering in this snapshot). The gate counts materialized docs:
-    // with ~5 surviving keys of 500+ indexed docs, far fewer than the
-    // corpus may flow (the boolean lock); the join replays in DuckDB.
+    // filtering in this snapshot). The gate reads its own scan's
+    // `docsMaterialized` metric: with ~5 surviving keys of 500+
+    // indexed docs, far fewer than the corpus may flow (the boolean
+    // lock); the join replays in DuckDB.
     "q2l_es_runtime_pruning" -> ((s, dir) => {
-      import graft.sources.EsStore
+      import graft.sources.{EsStore, StoreScan}
       import org.apache.spark.sql.types._
       val ixName = s"docs_rt_${Integer.toHexString(dir.hashCode)}"
       EsStore.drop(ixName)
@@ -916,12 +917,11 @@ object Connectors extends QueryPack {
       val joined = s.read.format("graft-es").option("index", ixName)
         .load()
         .join(broadcast(dim), Seq("dockey"))
-      val before = EsStore.docsMaterialized.get()
-      val agg = joined
+      val q = joined
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("nc_sum"),
           min(col("dockey")).as("k_min"), max(col("dockey")).as("k_max"))
-        .collect()(0)
-      val materialized = EsStore.docsMaterialized.get() - before
+      val agg = q.collect()(0)
+      val materialized = StoreScan.metric(q, "docsMaterialized")
       import s.implicits._
       Seq((agg.getLong(0), agg.getLong(1), agg.getString(2),
         agg.getString(3), materialized < total))
@@ -934,11 +934,12 @@ object Connectors extends QueryPack {
     // chopped on tablet boundaries — the dynamic counterpart of the
     // q1y range arm (runtime values on INDEXED columns ride the
     // IndexLookup decision tree instead; AccumuloKvSuite locks both
-    // arms at the Scan level). The gate counts rows the store
-    // actually examined: with ~28 surviving keys of 6000 rows, far
-    // fewer than the table may flow; the join replays in DuckDB.
+    // arms at the Scan level). The gate reads its own scan's
+    // `rowsMaterialized` metric: with ~28 surviving keys of 6000
+    // rows, far fewer than the table may flow; the join replays in
+    // DuckDB.
     "q2m_accumulo_runtime_pruning" -> ((s, dir) => {
-      import graft.sources.AccStore
+      import graft.sources.{AccStore, StoreScan}
       import org.apache.spark.sql.types._
       val tbl = s"ord_accrt_${Integer.toHexString(dir.hashCode)}"
       AccStore.drop(tbl)
@@ -963,13 +964,13 @@ object Connectors extends QueryPack {
       val joined = s.read.format("graft-accumulo").option("table", tbl)
         .load()
         .join(broadcast(dim), Seq("o_orderkey"))
-      val before = AccStore.rowsMaterialized.get()
-      val agg = joined
+      val q = joined
         .agg(count(lit(1)).as("n"),
           round(sum(col("o_totalprice")), 2).as("price_sum"),
           min(col("o_orderkey")).as("k_min"),
-          max(col("o_orderkey")).as("k_max")).collect()(0)
-      val examined = AccStore.rowsMaterialized.get() - before
+          max(col("o_orderkey")).as("k_max"))
+      val agg = q.collect()(0)
+      val examined = StoreScan.metric(q, "rowsMaterialized")
       import s.implicits._
       Seq((agg.getLong(0), agg.getDouble(1), agg.getLong(2),
         agg.getLong(3), examined < total))

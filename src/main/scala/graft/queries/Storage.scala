@@ -320,12 +320,14 @@ object Storage extends QueryPack {
         // execution overlap; 1.4 s of sequential jobs → ~0.5 s) and
         // the driver moves the nine part files into `out` — the same
         // nine-file layout the sequential appends produced.
+        // staging, clean-up and moves go through the session's Hadoop
+        // FileSystem, so they work on any FS the paths resolve to
         val stg = out + "_stg"
-        def rmTree(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-        }
-        rmTree(new java.io.File(stg))
-        rmTree(new java.io.File(out))
+        val outPath = new org.apache.hadoop.fs.Path(out)
+        val stgPath = new org.apache.hadoop.fs.Path(stg)
+        val fs = outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+        fs.delete(stgPath, true)
+        fs.delete(outPath, true)
         val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
         try {
           val futures = slices.zipWithIndex.map { case ((st, w, _), i) =>
@@ -347,17 +349,18 @@ object Storage extends QueryPack {
           }
           futures.foreach(_.get())
         } finally pool.shutdown()
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
+        fs.mkdirs(outPath)
         slices.indices.foreach { i =>
-          new java.io.File(s"$stg/s$i").listFiles()
-            .filter(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet"))
-            .foreach { f =>
-              java.nio.file.Files.move(f.toPath,
-                java.nio.file.Paths.get(out, s"slice_$i.parquet"))
+          fs.listStatus(new org.apache.hadoop.fs.Path(stgPath, s"s$i"))
+            .map(_.getPath)
+            .filter(p => p.getName.startsWith("part-") &&
+              p.getName.endsWith(".parquet"))
+            .foreach { p =>
+              require(fs.rename(p, new org.apache.hadoop.fs.Path(outPath,
+                s"slice_$i.parquet")), s"q3j: cannot move $p into $out")
             }
         }
-        rmTree(new java.io.File(stg))
+        fs.delete(stgPath, true)
       } finally s.conf.set(tsType, priorTs)
       // row total from the nine footers — no scan job (r18 OPT)
       val n = graft.Tables.parquetPathRowCount(s, out)
@@ -556,18 +559,15 @@ object Storage extends QueryPack {
       // node-level checks: InMemoryTableScan's STRING rendering embeds
       // the cached relation's original FileScan, so walk actual nodes
       import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
       import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-        // AQE leaf stages carry their subtree in `plan`, not `children`
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          q +: nodes(q.plan)
-        case other => other +: other.children.flatMap(nodes)
-      }
+      // AQE leaf stages carry their subtree in `plan`, not `children`;
+      // Spark's helper walks through them
       def planNodes(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] = {
         df.collect()
-        nodes(df.queryExecution.executedPlan)
+        new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+          case p => p
+        }
       }
       def usesFiles(df: org.apache.spark.sql.DataFrame): Boolean =
         planNodes(df).exists(_.isInstanceOf[FileSourceScanExec])

@@ -363,8 +363,7 @@ object TpcdsSql extends QueryPack {
   // every query then plans the production shape: a real columnar scan
   // with PushedFilters, honest file-size stats, one derivation cost
   // amortized over the whole suite. Per-JVM (not per-disk) so a swapped
-  // fixture (new driver testdata, ProbeTpcdsScale's replicated inputs
-  // after invalidateMaterialized) can never serve stale rows.
+  // fixture (new driver testdata) can never serve stale rows.
   // inventory is deliberately NOT here: it is pure generated arithmetic
   // (part x range x range, no join to collapse), and codegen'd
   // generation measures FASTER than scanning the equivalent parquet
@@ -399,15 +398,6 @@ object TpcdsSql extends QueryPack {
       factNames.foreach { t =>
         s.read.parquet(s"$matDir/$t").createOrReplaceTempView(t)
       }
-    }
-
-  /** Dev hook (ProbeTpcdsScale): forget materialized facts AND the
-    * registration guard so the next registerTpcds re-derives from the
-    * CURRENT source views. */
-  private[graft] def invalidateMaterialized(s: SparkSession): Unit =
-    synchronized {
-      materialized.remove(s)
-      tpcdsRegistered.remove(s)
     }
 
   private def sql(s: SparkSession, dir: String, q: String) = {

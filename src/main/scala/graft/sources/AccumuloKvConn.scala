@@ -8,9 +8,8 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -65,9 +64,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - '''Locality groups''' (`AccumuloClient.java:220-252`): families
   *     grouped per the table property; the row-id column cannot be in a
   *     locality group (`:231`); a projection fetches only the families
-  *     its columns and predicates need — [[AccStore.familyCells]]
-  *     counts per-family cell fetches, and the suite locks that the
-  *     untouched group reads ZERO cells.
+  *     its columns and predicates need — the scan's
+  *     `familyCells.<family>` metrics count per-family cell fetches,
+  *     and the suite locks that the untouched group reads ZERO cells.
   *   - '''Writes are Accumulo mutations''' (`io/AccumuloPageSink
   *     .java:142-170`): row ID from the row_id column (default: the
   *     FIRST column, `AccumuloClient.getRowIdColumn:280-284`),
@@ -141,7 +140,8 @@ object AccStore {
           keyComparator(c.dt))).toMap
     // the <table>_idx_metrics analog: per-value cardinalities +
     // ___rows___ count + first/last row (additive, like the Indexer's
-    // metrics mutations — upper bounds after overwrites)
+    // metrics mutations — upper bounds after overwrites). Store data
+    // the index planner reads, not per-query telemetry.
     private[sources] val cardinality: Map[String, ConcurrentHashMap[AnyRef, AtomicLong]] =
       columns.filter(_.indexed).map(c =>
         c.name -> new ConcurrentHashMap[AnyRef, AtomicLong]()).toMap
@@ -168,18 +168,6 @@ object AccStore {
   }
 
   private[graft] val tables = new ConcurrentHashMap[String, AccTable]()
-
-  /** Per-(table, family) data cells fetched — the locality-group
-    * pruning proof the suite locks. */
-  val familyCells = new ConcurrentHashMap[(String, String), AtomicLong]()
-
-  /** Candidate rows actually visited across all scans — an index scan's
-    * count rises by its candidates, not the table size. */
-  val rowsMaterialized = new AtomicLong(0L)
-
-  /** Last planning decision per table ("index ..." / "tabletScan ...")
-    * — surfaced for the suite, like the reference's planner debug log. */
-  val lastPlan = new ConcurrentHashMap[String, String]()
 
   def create(name: String, rowId: (String, DataType),
       columns: Seq[(String, String, DataType)], indexed: Set[String],
@@ -275,16 +263,6 @@ object AccStore {
         if (t.firstRow.forall(_ > key)) t.firstRow = Some(key)
         if (t.lastRow.forall(_ < key)) t.lastRow = Some(key)
       }
-  }
-
-  private[sources] def countCells(name: String, family: String,
-      n: Long): Unit =
-    familyCells.computeIfAbsent((name, family), _ => new AtomicLong(0L))
-      .addAndGet(n)
-
-  def cellsFetched(name: String, family: String): Long = {
-    val c = familyCells.get((name, family))
-    if (c == null) 0L else c.get()
   }
 
   /** The metrics table's `___rows___` count (additive upper bound). */
@@ -389,41 +367,23 @@ object AccStore {
   }
 }
 
-class AccumuloKvProvider extends TableProvider with DataSourceRegister {
-
-  override def shortName(): String = "graft-accumulo"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    AccumuloKvTable.schemaOf(options)
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new AccumuloKvTable(new CaseInsensitiveStringMap(properties))
-}
-
-object AccumuloKvTable {
-  def schemaOf(options: CaseInsensitiveStringMap): StructType = {
-    val name = options.get("table")
-    require(name != null && name.nonEmpty,
-      "graft-accumulo requires option 'table'")
-    val t = AccStore.table(name)
-    StructType(StructField(t.rowIdCol, t.rowIdType) +:
-      t.columns.map(c => StructField(c.name, c.dt)))
-  }
+class AccumuloKvProvider extends StoreProvider("graft-accumulo") {
+  override protected def open(o: CaseInsensitiveStringMap,
+      schema: StructType): Table = new AccumuloKvTable(o)
 }
 
 class AccumuloKvTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead with SupportsWrite {
+    extends StoreTable(s"graft-accumulo.${options.get("table")}",
+      TableCapability.BATCH_WRITE) with SupportsWrite {
 
-  private val tableName = options.get("table")
+  private val tableName =
+    StoreTable.option(options, "graft-accumulo", "table")
 
-  override def name(): String = s"graft-accumulo.$tableName"
-  override def schema(): StructType = AccumuloKvTable.schemaOf(options)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE)
+  override def schema(): StructType = {
+    val t = AccStore.table(tableName)
+    StructType(StructField(t.rowIdCol, t.rowIdType) +:
+      t.columns.map(c => StructField(c.name, c.dt)))
+  }
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new AccScanBuilder(tableName, schema(), o)
@@ -432,22 +392,19 @@ class AccumuloKvTable(options: CaseInsensitiveStringMap)
     new AccWriteBuilder(tableName, info.schema())
 }
 
-/** Compiles Spark source filters onto row-id ranges + column
-  * constraints. Compiled filters are FULLY enforced store-side (the
-  * filter-iterator analog re-applies them to every candidate row), so
-  * they are not residual; anything else stays a Spark filter. */
+/** Compiles Spark source filters onto row-id ranges (Left: one range
+  * set, intersected with the others) and column constraints (Right).
+  * Compiled filters are FULLY enforced store-side (the filter-iterator
+  * analog re-applies them to every candidate row), so they are not
+  * residual; anything else stays a Spark filter. */
 class AccScanBuilder(tableName: String, full: StructType,
     options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
+    extends StoreScanBuilder[
+      Seq[Either[Seq[AccStore.KeyRange], AccStore.Constraint]]](full) {
 
   import AccStore._
 
   private val t = AccStore.table(tableName)
-  private var pushed: Array[Filter] = Array.empty
-  private var rowRanges: Seq[KeyRange] = Seq(FullRange)
-  private var constraints: Seq[Constraint] = Seq.empty
-  private var required: StructType = full
 
   private def isRowId(a: String) = a == t.rowIdCol
   private def isCol(a: String) = t.colByName.contains(a)
@@ -462,95 +419,56 @@ class AccScanBuilder(tableName: String, full: StructType,
     }
   }
 
-  /** Intersect the running row-id range set with one more range set
-    * (top-level filters are conjuncts). */
-  private def constrainRows(rs: Seq[KeyRange]): Unit =
-    rowRanges = rowRanges.flatMap(a => rs.flatMap(a.intersect))
+  private def key(a: String, v: Any): Option[String] =
+    Some(encodeKey(norm(a, v)))
+  private def rows(r: KeyRange) = Some(Seq(Left(Seq(r))))
+  private def cons(a: String, spec: Spec) = Some(Seq(Right(Constraint(a, spec))))
 
-  private def tryCompile(f: Filter, apply: Boolean): Boolean = f match {
+  override protected def compile(f: Filter)
+      : Option[Seq[Either[Seq[KeyRange], Constraint]]] = f match {
     case EqualTo(a, v) if isRowId(a) && v != null =>
-      if (apply) {
-        val k = encodeKey(norm(a, v))
-        constrainRows(Seq(KeyRange(Some(k), true, Some(k), true)))
-      }
-      true
+      rows(KeyRange(key(a, v), true, key(a, v), true))
     case In(a, vs) if isRowId(a) && vs.nonEmpty && !vs.contains(null) =>
-      if (apply) constrainRows(vs.toSeq.map { v =>
-        val k = encodeKey(norm(a, v))
-        KeyRange(Some(k), true, Some(k), true)
-      })
-      true
+      Some(Seq(Left(vs.toSeq.map(v =>
+        KeyRange(key(a, v), true, key(a, v), true)))))
     case GreaterThan(a, v) if isRowId(a) && v != null =>
-      if (apply) constrainRows(
-        Seq(KeyRange(Some(encodeKey(norm(a, v))), false, None, false)))
-      true
+      rows(KeyRange(key(a, v), false, None, false))
     case GreaterThanOrEqual(a, v) if isRowId(a) && v != null =>
-      if (apply) constrainRows(
-        Seq(KeyRange(Some(encodeKey(norm(a, v))), true, None, false)))
-      true
+      rows(KeyRange(key(a, v), true, None, false))
     case LessThan(a, v) if isRowId(a) && v != null =>
-      if (apply) constrainRows(
-        Seq(KeyRange(None, false, Some(encodeKey(norm(a, v))), false)))
-      true
+      rows(KeyRange(None, false, key(a, v), false))
     case LessThanOrEqual(a, v) if isRowId(a) && v != null =>
-      if (apply) constrainRows(
-        Seq(KeyRange(None, false, Some(encodeKey(norm(a, v))), true)))
-      true
-    case IsNotNull(a) if isRowId(a) => true // row ids are never null
+      rows(KeyRange(None, false, key(a, v), true))
+    case IsNotNull(a) if isRowId(a) => Some(Seq.empty) // row ids are never null
     case EqualTo(a, v) if isCol(a) && v != null =>
-      if (apply) constraints :+= Constraint(a, ValuesIn(Seq(norm(a, v))))
-      true
+      cons(a, ValuesIn(Seq(norm(a, v))))
     case In(a, vs) if isCol(a) && vs.nonEmpty && !vs.contains(null) =>
-      if (apply)
-        constraints :+= Constraint(a, ValuesIn(vs.toSeq.map(norm(a, _))))
-      true
+      cons(a, ValuesIn(vs.toSeq.map(norm(a, _))))
     case GreaterThan(a, v) if isCol(a) && v != null =>
-      if (apply) constraints :+=
-        Constraint(a, ValueRange(Some(norm(a, v)), false, None, false))
-      true
+      cons(a, ValueRange(Some(norm(a, v)), false, None, false))
     case GreaterThanOrEqual(a, v) if isCol(a) && v != null =>
-      if (apply) constraints :+=
-        Constraint(a, ValueRange(Some(norm(a, v)), true, None, false))
-      true
+      cons(a, ValueRange(Some(norm(a, v)), true, None, false))
     case LessThan(a, v) if isCol(a) && v != null =>
-      if (apply) constraints :+=
-        Constraint(a, ValueRange(None, false, Some(norm(a, v)), false))
-      true
+      cons(a, ValueRange(None, false, Some(norm(a, v)), false))
     case LessThanOrEqual(a, v) if isCol(a) && v != null =>
-      if (apply) constraints :+=
-        Constraint(a, ValueRange(None, false, Some(norm(a, v)), true))
-      true
-    case IsNotNull(a) if isCol(a) =>
-      if (apply) constraints :+= Constraint(a, NotNullSpec)
-      true
-    case IsNull(a) if isCol(a) =>
-      if (apply) constraints :+= Constraint(a, NullSpec)
-      true
+      cons(a, ValueRange(None, false, Some(norm(a, v)), true))
+    case IsNotNull(a) if isCol(a) => cons(a, NotNullSpec)
+    case IsNull(a) if isCol(a) => cons(a, NullSpec)
     case And(l, r) =>
       // only take the AND if both sides compile (else fully residual)
-      if (tryCompile(l, false) && tryCompile(r, false)) {
-        if (apply) { tryCompile(l, true); tryCompile(r, true) }
-        true
-      }
-      else false
-    case _ => false
+      for (a <- compile(l); b <- compile(r)) yield a ++ b
+    case _ => None
   }
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, residual) = filters.partition(tryCompile(_, false))
-    ok.foreach(tryCompile(_, true))
-    pushed = ok
-    residual
+  override def build(): Scan = {
+    val parts = queries.flatten
+    // top-level filters are conjuncts: intersect the row-range sets
+    val rowRanges = parts.collect { case Left(rs) => rs }
+      .foldLeft(Seq(FullRange))((acc, rs) =>
+        acc.flatMap(a => rs.flatMap(a.intersect)))
+    new AccScan(tableName, rowRanges, parts.collect { case Right(c) => c },
+      required, pushed, options)
   }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan =
-    new AccScan(tableName, rowRanges, constraints, required, pushed,
-      options)
 }
 
 /** A bin of index-determined row IDs (`IndexLookup.binRanges`). */
@@ -564,9 +482,7 @@ final case class AccRangeSplit(table: String, range: AccStore.KeyRange)
 class AccScan(tableName: String, rowRanges: Seq[AccStore.KeyRange],
     constraints: Seq[AccStore.Constraint], required: StructType,
     pushedFilters: Array[Filter], options: CaseInsensitiveStringMap)
-    extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
+    extends StoreScan(required, pushedFilters) {
 
   import AccStore._
 
@@ -581,11 +497,13 @@ class AccScan(tableName: String, rowRanges: Seq[AccStore.KeyRange],
     * `IndexLookup.applyIndex` decision tree as planning-time
     * predicates, so a selective join probes the secondary index's
     * rowId sets instead of scanning tablets. Readers keep the STATIC
-    * constraint set — pruning is an I/O optimization, the join
-    * re-applies exact semantics ([[AccStore.rowsMaterialized]] counts
-    * the saved volume). */
+    * constraint set (the scan's `rowsMaterialized` metric counts the
+    * saved volume). */
   @volatile private var runtimeRanges: Seq[KeyRange] = Seq.empty
   @volatile private var runtimeConstraints: Seq[Constraint] = Seq.empty
+  /** The latest planning decision ("index ..." / "tabletScan ..."),
+    * shown in the description like the reference's planner debug log. */
+  @volatile private var decision = "?"
 
   private def normRt(col: String, v: Any): Any = {
     val dt = if (col == t.rowIdCol) t.rowIdType else t.colByName(col).dt
@@ -597,15 +515,11 @@ class AccScan(tableName: String, rowRanges: Seq[AccStore.KeyRange],
     }
   }
 
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
+  // only columns in the pruned read schema: Spark resolves these
+  // against the scan's OUTPUT and errors on a pruned-away column
+  override protected def runtimeColumns: Seq[String] =
     (t.rowIdCol +: t.columns.filter(_.indexed).map(_.name))
-      .distinct
-      // only columns in the pruned read schema: Spark resolves these
-      // against the scan's OUTPUT and errors on a pruned-away column
-      .filter(required.fieldNames.contains)
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-      .toArray
+      .distinct.filter(required.fieldNames.contains)
 
   override def filter(filters: Array[Filter]): Unit = {
     val rr = Seq.newBuilder[KeyRange]
@@ -647,13 +561,11 @@ class AccScan(tableName: String, rowRanges: Seq[AccStore.KeyRange],
     Option(options.get("index_lowest_cardinality_threshold"))
       .map(_.toDouble).getOrElse(0.01)
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-accumulo $tableName " +
-      s"PushedFilters: [${pushedFilters.mkString(", ")}] " +
-      s"plan=${AccStore.lastPlan.getOrDefault(tableName, "?")} cols=" +
-      required.fieldNames.mkString(",")
+  override protected def label: String = s"graft-accumulo $tableName"
+  override protected def detail: String = {
+    if (decision == "?") planned // the static plan, until one ran
+    s" plan=$decision"
+  }
 
   /** The `AccumuloClient.getTabletSplits:652-715` decision tree. */
   private def computePlanned(rr: Seq[KeyRange], cs: Seq[Constraint])
@@ -663,7 +575,7 @@ class AccScan(tableName: String, rowRanges: Seq[AccStore.KeyRange],
         case _: ValuesIn | _: ValueRange => true
         case _ => false // exists/missing are not index lookups
       }))
-    val (viaIndex, decision): (Option[Array[InputPartition]], String) =
+    val (viaIndex, how): (Option[Array[InputPartition]], String) =
       if (!optimizeIndex || indexed.isEmpty)
         (None, "tabletScan(noIndexedConstraint)")
       else if (!metricsEnabled) {
@@ -703,7 +615,7 @@ class AccScan(tableName: String, rowRanges: Seq[AccStore.KeyRange],
               (None, s"tabletScan(ratio,${hits.size}/$numRows)")
         }
       }
-    AccStore.lastPlan.put(tableName, decision)
+    decision = how
     viaIndex.getOrElse(tabletScan(rr))
   }
 
@@ -746,37 +658,38 @@ class AccScan(tableName: String, rowRanges: Seq[AccStore.KeyRange],
       computePlanned(rr, constraints ++ runtimeConstraints)
     }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new AccReaderFactory(required, constraints, rowRanges)
-
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
-    val rows = planned.map {
+  override protected def rowCount: Option[Long] =
+    Some(planned.map {
       case AccIndexSplit(_, ids) => ids.length.toLong
       case AccRangeSplit(_, r) =>
         var n = 0L
         val it = t.rows.keySet().iterator()
         while (it.hasNext) { if (r.contains(it.next())) n += 1 }
         n
-    }.sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 128L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
+    }.sum)
+
+  private val families = t.columns.map(_.family).distinct.sorted.toArray
+
+  // candidate rows visited (an index scan's count is its candidates,
+  // not the table size), then data cells fetched per family — the
+  // locality-group proof: an untouched group reads zero cells
+  override protected def taskMetrics: Seq[(String, String)] =
+    ("rowsMaterialized" -> "candidate rows examined") +:
+      families.toSeq.map(f =>
+        s"familyCells.$f" -> s"cells fetched from family $f")
+
+  override protected def reader: StoreScan.Reader =
+    AccScan.reader(required, constraints, rowRanges, families)
 }
 
-class AccReaderFactory(required: StructType,
-    constraints: Seq[AccStore.Constraint],
-    rowRanges: Seq[AccStore.KeyRange])
-    extends PartitionReaderFactory with Serializable {
-
+object AccScan {
   import AccStore._
 
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
+  /** Slot 0 counts candidate rows; slot 1 + i the cells of
+    * `families(i)`. */
+  def reader(required: StructType, constraints: Seq[Constraint],
+      rowRanges: Seq[KeyRange], families: Array[String])
+      : StoreScan.Reader = (p, counts) => {
     val (tableName, candidates) = p match {
       case AccIndexSplit(n, ids) =>
         val t = AccStore.table(n)
@@ -795,15 +708,11 @@ class AccReaderFactory(required: StructType,
     val neededCols = (required.fieldNames.toSet ++
       constraints.map(_.col)) - t.rowIdCol
     val neededFams = neededCols.map(c => t.colByName(c).family).toArray
+    val famSlots = neededFams.map(f => 1 + families.indexOf(f))
 
-    // r18 OPT: the per-row work below ran a type dispatch and map
-    // lookups per cell per row, re-applied the (usually full) row-range
-    // set per row, and bumped SHARED atomics per row — 32 concurrent
-    // readers serializing on two counters. Everything resolvable from
-    // the static scan description is now resolved ONCE per reader
-    // (constraint matchers, field accessors, range check), and the
-    // proof counters accumulate in task-local longs flushed at
-    // close(), so their totals are exact once the action completes.
+    // everything resolvable from the static scan description is
+    // resolved ONCE per reader (constraint matchers, field accessors,
+    // range check), and the counts are task-local slots
     def colValue(row: AccStore.AccRow, col: String): Any =
       if (col == t.rowIdCol) row.rowId
       else {
@@ -885,39 +794,20 @@ class AccReaderFactory(required: StructType,
       }
     }
 
-    var localMaterialized = 0L
-    val localCells = new Array[Long](neededFams.length)
-    val hits = candidates.filter { case (k, row) =>
-      localMaterialized += 1L
+    candidates.filter { case (k, row) =>
+      counts(0) += 1L
       matches(k, row)
-    }
-
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = hits.hasNext
-      override def get(): InternalRow = {
-        val (_, row) = hits.next()
-        var i = 0
-        while (i < neededFams.length) {
-          localCells(i) +=
-            row.families.getOrElse(neededFams(i), Map.empty).size.toLong
-          i += 1
-        }
-        val out = new Array[Any](fieldFns.length)
-        i = 0
-        while (i < fieldFns.length) { out(i) = fieldFns(i)(row); i += 1 }
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
+    }.map { case (_, row) =>
+      var i = 0
+      while (i < neededFams.length) {
+        counts(famSlots(i)) +=
+          row.families.getOrElse(neededFams(i), Map.empty).size.toLong
+        i += 1
       }
-      override def close(): Unit = {
-        AccStore.rowsMaterialized.addAndGet(localMaterialized)
-        localMaterialized = 0L
-        var i = 0
-        while (i < neededFams.length) {
-          if (localCells(i) > 0)
-            AccStore.countCells(tableName, neededFams(i), localCells(i))
-          localCells(i) = 0L
-          i += 1
-        }
-      }
+      val out = new Array[Any](fieldFns.length)
+      i = 0
+      while (i < fieldFns.length) { out(i) = fieldFns(i)(row); i += 1 }
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
     }
   }
 }

@@ -5,9 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -108,19 +107,14 @@ object AtopTables {
   }
 }
 
-class AtopLogProvider extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-atop"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    AtopTables.schemaOf(options.get("table"))
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new AtopLogTable(new CaseInsensitiveStringMap(properties))
+class AtopLogProvider extends StoreProvider("graft-atop") {
+  override protected def open(o: CaseInsensitiveStringMap,
+      schema: StructType): Table = new AtopLogTable(o)
 }
 
 class AtopLogTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
+    extends StoreTable(s"graft-atop.${options.get("store")}." +
+      options.get("table")) {
 
   private val store = {
     val s = options.get("store")
@@ -129,26 +123,23 @@ class AtopLogTable(options: CaseInsensitiveStringMap)
   }
   private val tableName = options.get("table")
 
-  override def name(): String = s"graft-atop.$store.$tableName"
   override def schema(): StructType = AtopTables.schemaOf(tableName)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new AtopScanBuilder(store, tableName, schema(),
       Option(options.get("max_history_days")).map(_.toInt).getOrElse(30))
 }
 
-/** Records the time bounds for day pruning; every filter stays
-  * residual (the reference's engine re-filters rows too). */
+/** Records inclusive epoch-second (column, lo, hi) bounds for day
+  * pruning; every filter stays residual (the reference's engine
+  * re-filters rows too). */
 class AtopScanBuilder(store: String, table: String, full: StructType,
-    maxHistoryDays: Int) extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
+    maxHistoryDays: Int)
+    extends StoreScanBuilder[(String, Long, Long)](full) {
 
-  // inclusive epoch-second bounds implied by the pushed constraint on
-  // each time column, as (lo, hi)
-  private var bounds = Map.empty[String, (Long, Long)]
-  private var required: StructType = full
+  private val timeCols = Set("start_time", "end_time", "power_on_time")
+
+  override protected def exact: Boolean = false
 
   private def epochOf(v: Any): Option[Long] = v match {
     case t: java.sql.Timestamp => Some(t.getTime / 1000)
@@ -156,37 +147,27 @@ class AtopScanBuilder(store: String, table: String, full: StructType,
     case _ => None
   }
 
-  private def narrow(col: String, lo: Option[Long], hi: Option[Long]): Unit = {
-    val (l0, h0) = bounds.getOrElse(col, (Long.MinValue, Long.MaxValue))
-    bounds += col -> (math.max(l0, lo.getOrElse(Long.MinValue)),
-      math.min(h0, hi.getOrElse(Long.MaxValue)))
-  }
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val timeCols = Set("start_time", "end_time", "power_on_time")
-    filters.foreach {
-      case EqualTo(c, v) if timeCols(c) =>
-        epochOf(v).foreach(e => narrow(c, Some(e), Some(e)))
+  override protected def compile(f: Filter): Option[(String, Long, Long)] =
+    f match {
+      case EqualTo(c, v) if timeCols(c) => epochOf(v).map(e => (c, e, e))
       case GreaterThan(c, v) if timeCols(c) =>
-        epochOf(v).foreach(e => narrow(c, Some(e), None))
+        epochOf(v).map(e => (c, e, Long.MaxValue))
       case GreaterThanOrEqual(c, v) if timeCols(c) =>
-        epochOf(v).foreach(e => narrow(c, Some(e), None))
+        epochOf(v).map(e => (c, e, Long.MaxValue))
       case LessThan(c, v) if timeCols(c) =>
-        epochOf(v).foreach(e => narrow(c, None, Some(e)))
+        epochOf(v).map(e => (c, Long.MinValue, e))
       case LessThanOrEqual(c, v) if timeCols(c) =>
-        epochOf(v).foreach(e => narrow(c, None, Some(e)))
-      case _ =>
+        epochOf(v).map(e => (c, Long.MinValue, e))
+      case _ => None
     }
-    filters // all residual
-  }
 
-  override def pushedFilters(): Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan =
+  override def build(): Scan = {
+    // the constraint on each time column, as one (lo, hi)
+    val bounds = queries.groupMapReduce(_._1)(q => (q._2, q._3)) {
+      case ((l0, h0), (l1, h1)) => (math.max(l0, l1), math.min(h0, h1))
+    }
     new AtopScan(store, table, required, bounds, maxHistoryDays)
+  }
 }
 
 final case class AtopSplit(store: String, table: String, host: String,
@@ -197,12 +178,11 @@ final case class AtopSplit(store: String, table: String, host: String,
 
 class AtopScan(store: String, table: String, required: StructType,
     bounds: Map[String, (Long, Long)], maxHistoryDays: Int)
-    extends Scan with Batch {
+    extends StoreScan(required) {
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-atop $table days<=$maxHistoryDays bounds=${bounds.keys.toSeq.sorted.mkString(",")}"
+  override protected def label: String = s"graft-atop $table"
+  override protected def detail: String =
+    s" days<=$maxHistoryDays bounds=${bounds.keys.toSeq.sorted.mkString(",")}"
 
   /** The `AtopSplitManager.getSplits:68-84` loop: one split per
     * (host, retained day), kept only when the day's time domain
@@ -224,15 +204,11 @@ class AtopScan(store: String, table: String, required: StructType,
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new AtopReaderFactory(required)
+  override protected def reader: StoreScan.Reader = AtopScan.reader(required)
 }
 
-class AtopReaderFactory(required: StructType)
-    extends PartitionReaderFactory with Serializable {
-
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
+object AtopScan {
+  def reader(required: StructType): StoreScan.Reader = (p, _) => {
     val split = p.asInstanceOf[AtopSplit]
     val raw = AtopLogStore.lines(split.store, split.host, split.epochDay)
 
@@ -262,34 +238,28 @@ class AtopReaderFactory(required: StructType)
       out.result()
     }
 
-    val it = samples.iterator
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = it.hasNext
-      override def get(): InternalRow = {
-        val f = it.next()
-        def epoch = f(2).toLong
-        def dur = f(5).toLong
-        def micros(sec: Long): Long = sec * 1000000L
-        InternalRow.fromSeq(required.fieldNames.toSeq.map {
-          case "host_ip" => UTF8String.fromString(split.host)
-          case "start_time" => micros(epoch - dur)
-          case "end_time" => micros(epoch)
-          case "power_on_time" => micros(epoch - dur)
-          case "device_name" => UTF8String.fromString(f(6))
-          case "utilization_percent" =>
-            // `AtopTable.java:47-55`: round(100·io/durationMs), cap 100
-            val u = math.round(100.0 * f(7).toLong / (dur * 1000.0))
-              .toDouble
-            if (u > 100) 100.0 else u
-          case "io_millis" => f(7).toLong
-          case "read_requests" => f(8).toLong
-          case "sectors_read" => f(9).toLong
-          case "write_requests" => f(10).toLong
-          case "sectors_written" => f(11).toLong
-          case other => sys.error(s"graft-atop: unknown column $other")
-        })
-      }
-      override def close(): Unit = ()
+    samples.iterator.map { f =>
+      def epoch = f(2).toLong
+      def dur = f(5).toLong
+      def micros(sec: Long): Long = sec * 1000000L
+      InternalRow.fromSeq(required.fieldNames.toSeq.map {
+        case "host_ip" => UTF8String.fromString(split.host)
+        case "start_time" => micros(epoch - dur)
+        case "end_time" => micros(epoch)
+        case "power_on_time" => micros(epoch - dur)
+        case "device_name" => UTF8String.fromString(f(6))
+        case "utilization_percent" =>
+          // `AtopTable.java:47-55`: round(100·io/durationMs), cap 100
+          val u = math.round(100.0 * f(7).toLong / (dur * 1000.0))
+            .toDouble
+          if (u > 100) 100.0 else u
+        case "io_millis" => f(7).toLong
+        case "read_requests" => f(8).toLong
+        case "sectors_read" => f(9).toLong
+        case "write_requests" => f(10).toLong
+        case "sectors_written" => f(11).toLong
+        case other => sys.error(s"graft-atop: unknown column $other")
+      })
     }
   }
 }

@@ -5,9 +5,8 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{InputPartition, ScanBuilder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -47,6 +46,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * distribution, and injected sleeps have no place in a library path.
   */
 object BlackholeConn {
+  // per-sink totals are the sink's contents, not per-query telemetry
   private val counters = new ConcurrentHashMap[String, AtomicLong]()
 
   /** Total rows discarded into the named sink since JVM start. */
@@ -92,38 +92,26 @@ object BlackholeConn {
   }
 }
 
-class BlackholeTableProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-blackhole"
-
-  // A pure sink needs no schema; reads must supply one (the reference
-  // reads the created table's declared columns — Spark's analog is
-  // .schema() on the reader).
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    new StructType()
-
-  override def supportsExternalMetadata(): Boolean = true
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new BlackholeTable(schema, new CaseInsensitiveStringMap(properties))
+// A pure sink needs no schema; reads must supply one (the reference
+// reads the created table's declared columns — Spark's analog is
+// .schema() on the reader).
+class BlackholeTableProvider
+    extends StoreProvider("graft-blackhole", externalSchema = true) {
+  override protected def open(o: CaseInsensitiveStringMap,
+      schema: StructType): Table = new BlackholeTable(schema, o)
 }
 
 class BlackholeTable(schema0: StructType, options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead with SupportsWrite {
+    extends StoreTable("graft-blackhole", TableCapability.BATCH_WRITE,
+      TableCapability.STREAMING_WRITE, TableCapability.TRUNCATE,
+      TableCapability.ACCEPT_ANY_SCHEMA) with SupportsWrite {
 
   private def intOpt(key: String, dflt: Int): Int = {
     val v = options.get(key)
     if (v == null) dflt else v.toInt
   }
 
-  override def name(): String = "graft-blackhole"
   override def schema(): StructType = schema0
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
-      TableCapability.TRUNCATE, TableCapability.ACCEPT_ANY_SCHEMA)
 
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
     schema0.fields.foreach(f => require(BlackholeConn.supported(f.dataType),
@@ -153,48 +141,40 @@ class BlackholeTable(schema0: StructType, options: CaseInsensitiveStringMap)
 final case class BlackholeSplit(id: Int) extends InputPartition
 
 class BlackholeScan(schema0: StructType, splits: Int, pages: Int,
-    rowsPerPage: Int, fieldLength: Int) extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-  override def readSchema(): StructType = schema0
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-blackhole splits=$splits pages=$pages rows=$rowsPerPage"
+    rowsPerPage: Int, fieldLength: Int) extends StoreScan(schema0) {
+
+  override protected def label: String = "graft-blackhole"
+  override protected def detail: String =
+    s" splits=$splits pages=$pages rows=$rowsPerPage"
 
   // synthetic tables know their exact cardinality — report it so join
   // planning sees the configured generation size
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
-    val rows = splits.toLong * pages * rowsPerPage
-    val width = schema0.fields.map(f => f.dataType match {
+  override protected def rowCount: Option[Long] =
+    Some(splits.toLong * pages * rowsPerPage)
+  override protected def rowBytes: Long =
+    schema0.fields.map(f => f.dataType match {
       case StringType | BinaryType => fieldLength.toLong
       case _ => 8L
     }).sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * math.max(1L, width))
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
 
   override def planInputPartitions(): Array[InputPartition] =
     (0 until splits).map(BlackholeSplit(_)).toArray[InputPartition]
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new BlackholeReaderFactory(schema0, pages.toLong * rowsPerPage, fieldLength)
+  override protected def reader: StoreScan.Reader =
+    BlackholeScan.reader(schema0, pages.toLong * rowsPerPage, fieldLength)
 }
 
-class BlackholeReaderFactory(schema: StructType, rowsPerSplit: Long,
-    fieldLength: Int) extends PartitionReaderFactory with Serializable {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      // one shared row, the reference's single reused zero Page
-      private val row = BlackholeConn.zeroRow(schema, fieldLength)
+object BlackholeScan {
+  def reader(schema: StructType, rowsPerSplit: Long,
+      fieldLength: Int): StoreScan.Reader = (_, _) => {
+    // one shared row, the reference's single reused zero Page
+    val row = BlackholeConn.zeroRow(schema, fieldLength)
+    new Iterator[InternalRow] {
       private var i = 0L
-      override def next(): Boolean = { i += 1; i <= rowsPerSplit }
-      override def get(): InternalRow = row
-      override def close(): Unit = ()
+      override def hasNext: Boolean = i < rowsPerSplit
+      override def next(): InternalRow = { i += 1; row }
     }
+  }
 }
 
 final case class BlackholeCommit(rows: Long) extends WriterCommitMessage

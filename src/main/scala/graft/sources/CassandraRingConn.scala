@@ -5,9 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -65,11 +64,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * clustering slice reads O(log n + hits) of its partition.
   */
 object CassStore {
-
-  /** Split-type counters — CI proof that runtime filtering converts a
-    * token scan into partition-key splits at execution. */
-  val tokenSplitsOpened = new java.util.concurrent.atomic.AtomicLong(0L)
-  val partitionSplitsOpened = new java.util.concurrent.atomic.AtomicLong(0L)
 
   final case class TableDef(partitionKeys: Seq[String],
       clusteringKeys: Seq[String], fields: Seq[(String, DataType)]) {
@@ -197,49 +191,31 @@ object CassStore {
   }
 }
 
-class CassandraRingProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-cassandra"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    CassandraRingTable.schemaOf(options)
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new CassandraRingTable(new CaseInsensitiveStringMap(properties))
+class CassandraRingProvider extends StoreProvider("graft-cassandra") {
+  override protected def open(o: CaseInsensitiveStringMap,
+      schema: StructType): Table = new CassandraRingTable(o)
 }
 
 object CassandraRingTable {
-  def schemaOf(options: CaseInsensitiveStringMap): StructType = {
-    val name = options.get("table")
-    require(name != null && name.nonEmpty,
-      "graft-cassandra requires option 'table'")
-    StructType(CassStore.table(name).defn.fields.map { case (f, dt) =>
-      StructField(f, dt)
-    })
-  }
-
   /** `partitionSizeForBatchSelect` — the reference's IN-batch width. */
   val PartitionBatch = 100
   val DefaultSplitSize = 64
 }
 
 class CassandraRingTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead with SupportsWrite {
+    extends StoreTable(s"graft-cassandra.${options.get("table")}",
+      TableCapability.BATCH_WRITE) with SupportsWrite {
 
-  private val tableName = options.get("table")
+  private val tableName =
+    StoreTable.option(options, "graft-cassandra", "table")
   private val splitSize =
     Option(options.get("split.size")).map(_.toInt)
       .getOrElse(CassandraRingTable.DefaultSplitSize)
 
-  override def name(): String = s"graft-cassandra.$tableName"
-  override def schema(): StructType = CassandraRingTable.schemaOf(options)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE)
+  override def schema(): StructType =
+    StructType(CassStore.table(tableName).defn.fields.map { case (f, dt) =>
+      StructField(f, dt)
+    })
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new CassScanBuilder(tableName, splitSize, schema())
@@ -282,15 +258,17 @@ final case class TokenRangeSplit(table: String, start: Long, end: Long,
 final case class PartitionsSplit(table: String, pks: Seq[Seq[Any]],
     bound: ClusteringBound) extends CassSplit
 
+/** CQL's pushdown rules are over the WHOLE conjunction (every
+  * partition-key column bound; a clustering prefix), not per filter,
+  * so this builder replaces the per-filter compile with `pushFilters`. */
 class CassScanBuilder(tableName: String, splitSize: Int, full: StructType)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
+    extends StoreScanBuilder[Nothing](full) {
 
   private val defn = CassStore.table(tableName).defn
-  private var pushed: Array[Filter] = Array.empty
   private var pkValues: Option[Seq[Seq[Any]]] = None
   private var bound = ClusteringBound(Seq.empty, None)
-  private var required: StructType = full
+
+  override protected def compile(f: Filter): Option[Nothing] = None
 
   private def lit(col: String, v: Any): Option[Any] = {
     // normalize the filter literal to the stored representation
@@ -394,21 +372,14 @@ class CassScanBuilder(tableName: String, splitSize: Int, full: StructType)
     filters.filterNot(pushed.contains)
   }
 
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
   override def build(): Scan =
     new CassScan(tableName, splitSize, pkValues, bound, required, pushed)
 }
 
 class CassScan(tableName: String, splitSize: Int,
     pkValues: Option[Seq[Seq[Any]]], bound: ClusteringBound,
-    required: StructType, pushedFilters: Array[Filter]) extends Scan
-    with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
+    required: StructType, pushedFilters: Array[Filter])
+    extends StoreScan(required, pushedFilters) {
 
   /** RUNTIME partition pruning (Spark's dynamic-pruning hook for DSv2
     * scans, SPARK-35779): when a selective dim join's build side
@@ -441,12 +412,10 @@ class CassScan(tableName: String, splitSize: Int,
       case _ => None
     }
 
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
+  override protected def runtimeColumns: Seq[String] =
     if (defn.partitionKeys.size == 1 && pkValues.isEmpty)
-      Array(org.apache.spark.sql.connector.expressions.Expressions
-        .column(defn.partitionKeys.head))
-    else Array.empty
+      defn.partitionKeys
+    else Nil
 
   override def filter(filters: Array[Filter]): Unit = {
     val pk = defn.partitionKeys.head
@@ -459,13 +428,10 @@ class CassScan(tableName: String, splitSize: Int,
     }
   }
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-cassandra $tableName " +
-      s"PushedFilters: [${pushedFilters.mkString(", ")}] " +
-      (if (pkValues.isDefined) s"partitions=${pkValues.get.length} "
-       else "tokenScan ") + "cols=" + required.fieldNames.mkString(",")
+  override protected def label: String = s"graft-cassandra $tableName"
+  override protected def detail: String =
+    if (pkValues.isDefined) s" partitions=${pkValues.get.length}"
+    else " tokenScan"
 
   override def planInputPartitions(): Array[InputPartition] =
     pkValues.orElse(runtimePks) match {
@@ -485,13 +451,9 @@ class CassScan(tableName: String, splitSize: Int,
         }.toArray
     }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new CassReaderFactory(required)
-
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
+  override protected def rowCount: Option[Long] = {
     val t = CassStore.table(tableName)
-    val rows = pkValues match {
+    Some(pkValues match {
       case Some(pks) => pks.map(pk =>
         Option(t.partitions.get(pk)).map(_.rows.length.toLong)
           .getOrElse(0L)).sum
@@ -499,24 +461,24 @@ class CassScan(tableName: String, splitSize: Int,
         var n = 0L
         t.partitions.forEach((_, p) => n += p.rows.length)
         n
-    }
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 128L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
+    })
   }
+
+  // which split kind ran: the proof that runtime filtering converts a
+  // token scan into partition-key splits at execution
+  override protected def taskMetrics: Seq[(String, String)] = Seq(
+    "tokenSplitsOpened" -> "token-range splits opened",
+    "partitionSplitsOpened" -> "partition-key splits opened")
+
+  override protected def reader: StoreScan.Reader = CassScan.reader(required)
 }
 
-class CassReaderFactory(required: StructType)
-    extends PartitionReaderFactory with Serializable {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+object CassScan {
+  def reader(required: StructType): StoreScan.Reader = (p, counts) => {
     val split = p.asInstanceOf[CassSplit]
     split match {
-      case _: TokenRangeSplit => CassStore.tokenSplitsOpened.incrementAndGet()
-      case _: PartitionsSplit => CassStore.partitionSplitsOpened.incrementAndGet()
+      case _: TokenRangeSplit => counts(0) += 1
+      case _: PartitionsSplit => counts(1) += 1
     }
     val t = CassStore.table(split.table)
     val idx = t.defn.fields.map(_._1).zipWithIndex.toMap
@@ -567,28 +529,20 @@ class CassReaderFactory(required: StructType)
             tok > start && tok <= end
           }.map(_.getValue)
     }
-    val rowIter = parts.flatMap(sliceOf)
-
-    new PartitionReader[InternalRow] {
-      private var cur: Seq[Any] = _
-      override def next(): Boolean = {
-        if (rowIter.hasNext) { cur = rowIter.next(); true } else false
-      }
-      override def get(): InternalRow =
-        InternalRow.fromSeq(outIdx.toSeq.map { case (i, dt) =>
-          cur(i) match {
-            case null => null
-            case v => dt match {
-              case StringType => UTF8String.fromString(v.toString)
-              case LongType => v.asInstanceOf[Number].longValue()
-              case IntegerType => v.asInstanceOf[Number].intValue()
-              case DoubleType => v.asInstanceOf[Number].doubleValue()
-              case BooleanType => v.asInstanceOf[Boolean]
-              case other => sys.error(s"graft-cassandra: bad type $other")
-            }
+    parts.flatMap(sliceOf).map { cur =>
+      InternalRow.fromSeq(outIdx.toSeq.map { case (i, dt) =>
+        cur(i) match {
+          case null => null
+          case v => dt match {
+            case StringType => UTF8String.fromString(v.toString)
+            case LongType => v.asInstanceOf[Number].longValue()
+            case IntegerType => v.asInstanceOf[Number].intValue()
+            case DoubleType => v.asInstanceOf[Number].doubleValue()
+            case BooleanType => v.asInstanceOf[Boolean]
+            case other => sys.error(s"graft-cassandra: bad type $other")
           }
-        })
-      override def close(): Unit = ()
+        }
+      })
     }
   }
 }

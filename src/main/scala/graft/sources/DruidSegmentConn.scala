@@ -5,10 +5,10 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expression => VExpression, Transform}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.expressions.{Expression => VExpression}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min, Sum}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownAggregates}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -60,10 +60,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * rows; time pruning cuts the segment list before any task launches.
   */
 object DruidStore {
-
-  /** Segments actually opened by readers — the CI proof that runtime
-    * filtering pruned the historical fan-out at execution. */
-  val segmentsOpened = new java.util.concurrent.atomic.AtomicLong(0L)
 
   final case class DruidDef(granularityMs: Long,
       dims: Seq[String], metrics: Seq[(String, DataType)]) {
@@ -129,34 +125,18 @@ object DruidStore {
   def segmentCount(name: String): Int = datasource(name).segments.size()
 }
 
-class DruidSegmentProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-druid"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val name = options.get("datasource")
-    require(name != null && name.nonEmpty,
-      "graft-druid requires option 'datasource'")
-    DruidStore.datasource(name).defn.schema
-  }
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new DruidSegmentTable(new CaseInsensitiveStringMap(properties))
+class DruidSegmentProvider extends StoreProvider("graft-druid") {
+  override protected def open(o: CaseInsensitiveStringMap,
+      schema: StructType): Table = new DruidSegmentTable(o)
 }
 
 class DruidSegmentTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
+    extends StoreTable(s"graft-druid.${options.get("datasource")}") {
 
-  private val dsName = options.get("datasource")
+  private val dsName =
+    StoreTable.option(options, "graft-druid", "datasource")
 
-  override def name(): String = s"graft-druid.$dsName"
   override def schema(): StructType = DruidStore.datasource(dsName).defn.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new DruidScanBuilder(dsName)
@@ -173,42 +153,35 @@ final case class DruidAggSpec(groupDims: Seq[String],
     aggs: Seq[(String, String, DataType)]) // (op, column|"", resultType)
     extends Serializable
 
+/** Pushed filters compile to (tsLo, tsHi, dimension terms): `__time`
+  * bounds narrow the window [tsLo, tsHi), dimension equalities become
+  * term filters, and NOT NULL on `__time` or a dimension is always
+  * true. */
 class DruidScanBuilder(dsName: String)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownAggregates with SupportsPushDownRequiredColumns {
+    extends StoreScanBuilder[(Long, Long, Option[(String, Seq[String])])](
+      DruidStore.datasource(dsName).defn.schema)
+    with SupportsPushDownAggregates {
 
   private val defn = DruidStore.datasource(dsName).defn
-  private var pushed: Array[Filter] = Array.empty
-  private var tsLo = Long.MinValue
-  private var tsHi = Long.MaxValue
-  private var dimEq: Seq[(String, Seq[String])] = Seq.empty
   private var aggSpec: Option[DruidAggSpec] = None
-  private var required: StructType = defn.schema
 
   private def isDim(f: String) = defn.dims.contains(f)
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val eqs = mutable.ArrayBuffer.empty[(String, Seq[String])]
-    val ok = filters.filter {
-      case GreaterThan("__time", v: Long) => tsLo = math.max(tsLo, v + 1); true
-      case GreaterThanOrEqual("__time", v: Long) =>
-        tsLo = math.max(tsLo, v); true
-      case LessThan("__time", v: Long) => tsHi = math.min(tsHi, v); true
-      case LessThanOrEqual("__time", v: Long) =>
-        tsHi = math.min(tsHi, v + 1); true
-      case EqualTo(a, v) if isDim(a) && v != null =>
-        eqs += ((a, Seq(v.toString))); true
-      case In(a, vs) if isDim(a) && vs.nonEmpty && !vs.contains(null) =>
-        eqs += ((a, vs.map(_.toString).toSeq)); true
-      case IsNotNull(a) if a == "__time" || isDim(a) => true // never null
-      case _ => false
-    }
-    dimEq = eqs.toSeq
-    pushed = ok
-    filters.filterNot(ok.contains)
+  override protected def compile(f: Filter)
+      : Option[(Long, Long, Option[(String, Seq[String])])] = f match {
+    case GreaterThan("__time", v: Long) => Some((v + 1, Long.MaxValue, None))
+    case GreaterThanOrEqual("__time", v: Long) => Some((v, Long.MaxValue, None))
+    case LessThan("__time", v: Long) => Some((Long.MinValue, v, None))
+    case LessThanOrEqual("__time", v: Long) =>
+      Some((Long.MinValue, v + 1, None))
+    case EqualTo(a, v) if isDim(a) && v != null =>
+      Some((Long.MinValue, Long.MaxValue, Some((a, Seq(v.toString)))))
+    case In(a, vs) if isDim(a) && vs.nonEmpty && !vs.contains(null) =>
+      Some((Long.MinValue, Long.MaxValue, Some((a, vs.map(_.toString).toSeq))))
+    case IsNotNull(a) if a == "__time" || isDim(a) => // never null
+      Some((Long.MinValue, Long.MaxValue, None))
+    case _ => None
   }
-
-  override def pushedFilters(): Array[Filter] = pushed
 
   /** The `DruidPlanOptimizer` decision: grouped count/sum/min/max over
     * dimensions pushes (each segment answers partially, Spark is the
@@ -255,17 +228,17 @@ class DruidScanBuilder(dsName: String)
 
   override def build(): Scan =
     new DruidScan(dsName,
-      DruidQuerySpec(tsLo, tsHi, dimEq, aggSpec), required, pushed)
+      DruidQuerySpec(queries.map(_._1).foldLeft(Long.MinValue)(math.max),
+        queries.map(_._2).foldLeft(Long.MaxValue)(math.min),
+        queries.flatMap(_._3), aggSpec), required, pushed)
 }
 
 final case class DruidSegmentSplit(ds: String, segmentStart: Long,
     spec: DruidQuerySpec) extends InputPartition
 
 class DruidScan(dsName: String, spec: DruidQuerySpec,
-    required: StructType, pushedFilters: Array[Filter]) extends Scan
-    with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
+    required: StructType, pushedFilters: Array[Filter])
+    extends StoreScan(required, pushedFilters) {
 
   /** RUNTIME segment pruning (Spark's dynamic-pruning hook for DSv2,
     * SPARK-35779) — the time-dimension DPP every star-schema query
@@ -277,27 +250,19 @@ class DruidScan(dsName: String, spec: DruidQuerySpec,
     * matter. */
   @volatile private var runtimeTimes: Option[Seq[Long]] = None
 
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions
-      .column("__time"))
+  override protected def runtimeColumns: Seq[String] = Seq("__time")
 
-  override def filter(filters: Array[Filter]): Unit = {
+  override def filter(filters: Array[Filter]): Unit =
     runtimeTimes = filters.collectFirst {
       case In("__time", vs) if vs.nonEmpty &&
           vs.forall(_.isInstanceOf[Number]) =>
         vs.toSeq.map(_.asInstanceOf[Number].longValue())
       case EqualTo("__time", v: Number) => Seq(v.longValue())
     }
-  }
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-druid $dsName " +
-      s"PushedFilters: [${pushedFilters.mkString(", ")}] " +
-      s"PushedAggregation: ${spec.agg.isDefined} " +
-      "cols=" + required.fieldNames.mkString(",")
+  override protected def label: String = s"graft-druid $dsName"
+  override protected def detail: String =
+    s" PushedAggregation: ${spec.agg.isDefined}"
 
   /** Segment pruning by time interval, then one split per survivor. */
   override def planInputPartitions(): Array[InputPartition] = {
@@ -312,11 +277,7 @@ class DruidScan(dsName: String, spec: DruidQuerySpec,
       .toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new DruidReaderFactory(required)
-
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
+  override protected def rowCount: Option[Long] = {
     val ds = DruidStore.datasource(dsName)
     var rows = 0L
     planInputPartitions().foreach { p =>
@@ -324,22 +285,21 @@ class DruidScan(dsName: String, spec: DruidQuerySpec,
         p.asInstanceOf[DruidSegmentSplit].segmentStart)
       if (seg != null) rows += seg.synchronized(seg.rows.length.toLong)
     }
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 128L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
+    Some(rows)
   }
+
+  // the proof that runtime filtering pruned the historical fan-out
+  override protected def taskMetrics: Seq[(String, String)] =
+    Seq("segmentsOpened" -> "segments opened")
+
+  override protected def reader: StoreScan.Reader = DruidScan.reader(required)
 }
 
-class DruidReaderFactory(required: StructType)
-    extends PartitionReaderFactory with Serializable {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+object DruidScan {
+  def reader(required: StructType): StoreScan.Reader = (p, counts) => {
     val DruidSegmentSplit(dsName, start, spec) =
       p.asInstanceOf[DruidSegmentSplit]
-    DruidStore.segmentsOpened.incrementAndGet()
+    counts(0) += 1
     val ds = DruidStore.datasource(dsName)
     val defn = ds.defn
     val seg = ds.segments.get(start)
@@ -423,22 +383,17 @@ class DruidReaderFactory(required: StructType)
         }
     }
 
-    new PartitionReader[InternalRow] {
-      private var cur: Seq[Any] = _
-      override def next(): Boolean =
-        if (out.hasNext) { cur = out.next(); true } else false
-      override def get(): InternalRow =
-        InternalRow.fromSeq(cur.zip(required.fields.toSeq).map {
-          case (null, _) => null
-          case (v: String, _) => UTF8String.fromString(v)
-          case (v, f) => f.dataType match {
-            case LongType => v.asInstanceOf[Number].longValue()
-            case DoubleType => v.asInstanceOf[Number].doubleValue()
-            case StringType => UTF8String.fromString(v.toString)
-            case other => sys.error(s"graft-druid: bad type $other")
-          }
-        })
-      override def close(): Unit = ()
+    out.map { cur =>
+      InternalRow.fromSeq(cur.zip(required.fields.toSeq).map {
+        case (null, _) => null
+        case (v: String, _) => UTF8String.fromString(v)
+        case (v, f) => f.dataType match {
+          case LongType => v.asInstanceOf[Number].longValue()
+          case DoubleType => v.asInstanceOf[Number].doubleValue()
+          case StringType => UTF8String.fromString(v.toString)
+          case other => sys.error(s"graft-druid: bad type $other")
+        }
+      })
     }
   }
 }

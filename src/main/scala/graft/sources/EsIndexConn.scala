@@ -1,14 +1,12 @@
 package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -47,9 +45,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *     offset arrays per numeric field, built at [[EsStore.refresh]]
   *     (the Lucene inverted-index/BKD shapes this query surface
   *     needs). A pushed query intersects posting lists / binary-
-  *     searches ranges, materializing ONLY matching documents —
-  *     [[EsStore.docsMaterialized]] counts them, and the suite locks
-  *     that a selective term query reads its hits, not the shard.
+  *     searches ranges, materializing ONLY matching documents — the
+  *     scan's `docsMaterialized` metric counts them, and the suite
+  *     locks that a selective term query reads its hits, not the shard.
   *   - '''Column pruning''': only requested fields materialize
   *     (the `_source` field-extraction analog), `_id` available as a
   *     column like the reference's `setFieldIfExists("_id", ...)`.
@@ -85,11 +83,6 @@ object EsStore {
       mapping: Mapping)
 
   private[graft] val indexes = new ConcurrentHashMap[String, Index]()
-
-  /** Documents actually materialized into rows across all queries —
-    * the index-driven-execution proof the suite locks (a selective
-    * query's count rises by its hit count, not by shard sizes). */
-  val docsMaterialized = new AtomicLong(0L)
 
   def create(name: String, shards: Int,
       fields: Seq[(String, DataType)]): Unit = {
@@ -241,44 +234,23 @@ object EsStore {
   }
 }
 
-class EsIndexProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-es"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    EsIndexTable.schemaOf(options)
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new EsIndexTable(new CaseInsensitiveStringMap(properties))
-}
-
-object EsIndexTable {
-  /** `_id` + the mapped fields — `ElasticsearchRecordCursor`'s
-    * setFieldIfExists("_id", hit.getId()) plus the _source fields. */
-  def schemaOf(options: CaseInsensitiveStringMap): StructType = {
-    val name = options.get("index")
-    require(name != null && name.nonEmpty,
-      "graft-es requires option 'index'")
-    StructType(StructField("_id", StringType) +:
-      EsStore.index(name).mapping.fields.map { case (f, dt) =>
-        StructField(f, dt)
-      })
-  }
+class EsIndexProvider extends StoreProvider("graft-es") {
+  override protected def open(o: CaseInsensitiveStringMap,
+      schema: StructType): Table = new EsIndexTable(o)
 }
 
 class EsIndexTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
+    extends StoreTable(s"graft-es.${options.get("index")}") {
 
-  private val indexName = options.get("index")
+  private val indexName = StoreTable.option(options, "graft-es", "index")
 
-  override def name(): String = s"graft-es.$indexName"
-  override def schema(): StructType = EsIndexTable.schemaOf(options)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  /** `_id` + the mapped fields — `ElasticsearchRecordCursor`'s
+    * setFieldIfExists("_id", hit.getId()) plus the _source fields. */
+  override def schema(): StructType =
+    StructType(StructField("_id", StringType) +:
+      EsStore.index(indexName).mapping.fields.map { case (f, dt) =>
+        StructField(f, dt)
+      })
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new EsScanBuilder(indexName, schema())
@@ -289,14 +261,10 @@ class EsIndexTable(options: CaseInsensitiveStringMap)
   * that compile are FULLY handled by the index (exact term/range/exists
   * evaluation, so Spark plans no re-filter); the rest stay residual. */
 class EsScanBuilder(indexName: String, full: StructType)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
+    extends StoreScanBuilder[EsStore.Query](full) {
 
   private val fieldTypes: Map[String, DataType] =
     EsStore.index(indexName).mapping.fields.toMap
-  private var pushed: Array[Filter] = Array.empty
-  private var queries: Seq[EsStore.Query] = Seq.empty
-  private var required: StructType = full
 
   private def num(v: Any): Option[Double] = v match {
     case n: Number => Some(n.doubleValue())
@@ -309,8 +277,7 @@ class EsScanBuilder(indexName: String, full: StructType)
     fieldTypes.get(f).exists(dt =>
       dt == LongType || dt == IntegerType || dt == DoubleType)
 
-  /** One Spark filter -> one query, or None (stays residual). */
-  private def compile(f: Filter): Option[EsStore.Query] = f match {
+  override protected def compile(f: Filter): Option[EsStore.Query] = f match {
     case EqualTo(a, v) if termable(a) && v != null =>
       Some(EsStore.Terms(a, Seq(v.toString)))
     case In(a, vs) if termable(a) && vs.nonEmpty && !vs.contains(null) =>
@@ -337,18 +304,6 @@ class EsScanBuilder(indexName: String, full: StructType)
     case _ => None
   }
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, residual) = filters.partition(f => compile(f).isDefined)
-    pushed = ok
-    queries = ok.flatMap(compile(_)).toSeq
-    residual // Spark re-applies only what the index cannot answer
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
   override def build(): Scan =
     new EsScan(indexName, EsStore.BoolMust(queries), required, pushed)
 }
@@ -359,10 +314,8 @@ final case class EsShardSplit(index: String, shard: Int,
     query: EsStore.Query) extends InputPartition
 
 class EsScan(indexName: String, query: EsStore.Query,
-    required: StructType, pushedFilters: Array[Filter] = Array.empty)
-    extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
+    required: StructType, pushedFilters: Array[Filter])
+    extends StoreScan(required, pushedFilters) {
 
   /** RUNTIME term pruning (Spark's dynamic-pruning hook for DSv2,
     * SPARK-35779): after a join's build side executes, Spark hands the
@@ -372,26 +325,25 @@ class EsScan(indexName: String, query: EsStore.Query,
     * the join probe from its posting lists — only documents whose key
     * appears on the build side materialize (the ES analog of Kudu's
     * runtime tablet pruning; here the saved I/O is document
-    * materialization, counted by [[EsStore.docsMaterialized]]). Rows
-    * are NOT re-filtered with the runtime values: pruning is an I/O
-    * optimization, the join re-applies exact semantics. */
+    * materialization, the scan's `docsMaterialized` metric). */
   @volatile private var runtimeQs: Seq[EsStore.Query] = Seq.empty
 
   private val fieldTypes: Map[String, DataType] =
     EsStore.index(indexName).mapping.fields.toMap
 
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    // term fields only (the posting-list surface a join-key In rides),
-    // restricted to the pruned read schema: Spark resolves these
-    // against the scan's OUTPUT and errors on a pruned-away column
+  override protected def label: String = s"graft-es $indexName"
+  override protected def detail: String = s" query=$query"
+
+  // term fields only (the posting-list surface a join-key In rides),
+  // restricted to the pruned read schema: Spark resolves these against
+  // the scan's OUTPUT and errors on a pruned-away column
+  override protected def runtimeColumns: Seq[String] =
     fieldTypes.collect {
       case (f, StringType | BooleanType)
         if required.fieldNames.contains(f) => f
-    }.map(org.apache.spark.sql.connector.expressions.Expressions.column)
-      .toArray
+    }.toSeq
 
-  override def filter(filters: Array[Filter]): Unit = {
+  override def filter(filters: Array[Filter]): Unit =
     runtimeQs = filters.toSeq.flatMap {
       case In(f, vs) if vs.nonEmpty && !vs.contains(null) =>
         Some(EsStore.Terms(f, vs.map(_.toString).toSeq))
@@ -399,14 +351,6 @@ class EsScan(indexName: String, query: EsStore.Query,
         Some(EsStore.Terms(f, Seq(v.toString)))
       case _ => None
     }
-  }
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-es $indexName " +
-      s"PushedFilters: [${pushedFilters.mkString(", ")}] " +
-      s"query=$query cols=" + required.fieldNames.mkString(",")
 
   override def planInputPartitions(): Array[InputPartition] = {
     val q =
@@ -416,29 +360,22 @@ class EsScan(indexName: String, query: EsStore.Query,
       .map(i => EsShardSplit(indexName, i, q): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new EsReaderFactory(required)
-
   // exact hit counts from the index (the search-shards count probe) —
   // a selective control query can broadcast
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
-    val ix = EsStore.index(indexName)
-    val rows = ix.shards.map(s =>
-      s.synchronized(EsStore.search(s, query).length.toLong)).sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 256L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
+  override protected def rowCount: Option[Long] =
+    Some(EsStore.index(indexName).shards.map(s =>
+      s.synchronized(EsStore.search(s, query).length.toLong)).sum)
+  override protected def rowBytes: Long = 256L
+
+  override protected def taskMetrics: Seq[(String, String)] =
+    Seq("docsMaterialized" -> "documents materialized")
+
+  override protected def reader: StoreScan.Reader = EsScan.reader(required)
 }
 
-class EsReaderFactory(required: StructType)
-    extends PartitionReaderFactory with Serializable {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+object EsScan {
+  /** Materializes only the shard's hits, counting each document. */
+  def reader(required: StructType): StoreScan.Reader = (p, counts) => {
     val EsShardSplit(name, shardIdx, query) = p.asInstanceOf[EsShardSplit]
     val ix = EsStore.index(name)
     val shard = ix.shards(shardIdx)
@@ -447,28 +384,22 @@ class EsReaderFactory(required: StructType)
         "EsStore.refresh first (the ES index/refresh lifecycle)")
     val fieldTypes = ix.mapping.fields.toMap
     val hits = shard.synchronized(EsStore.search(shard, query))
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < hits.length }
-      override def get(): InternalRow = {
-        EsStore.docsMaterialized.incrementAndGet()
-        val off = hits(i)
-        val doc = shard.docs(off)
-        InternalRow.fromSeq(required.fields.map { f =>
-          if (f.name == "_id") UTF8String.fromString(shard.ids(off))
-          else doc.get(f.name).filter(_ != null).map { v =>
-            fieldTypes(f.name) match {
-              case StringType => UTF8String.fromString(v.toString)
-              case LongType => v.asInstanceOf[Number].longValue()
-              case IntegerType => v.asInstanceOf[Number].intValue()
-              case DoubleType => v.asInstanceOf[Number].doubleValue()
-              case BooleanType => v.asInstanceOf[Boolean]
-              case other => sys.error(s"graft-es: bad type $other")
-            }
-          }.orNull
-        }.toSeq)
-      }
-      override def close(): Unit = ()
+    hits.iterator.map { off =>
+      counts(0) += 1
+      val doc = shard.docs(off)
+      InternalRow.fromSeq(required.fields.map { f =>
+        if (f.name == "_id") UTF8String.fromString(shard.ids(off))
+        else doc.get(f.name).filter(_ != null).map { v =>
+          fieldTypes(f.name) match {
+            case StringType => UTF8String.fromString(v.toString)
+            case LongType => v.asInstanceOf[Number].longValue()
+            case IntegerType => v.asInstanceOf[Number].intValue()
+            case DoubleType => v.asInstanceOf[Number].doubleValue()
+            case BooleanType => v.asInstanceOf[Boolean]
+            case other => sys.error(s"graft-es: bad type $other")
+          }
+        }.orNull
+      }.toSeq)
     }
   }
 }

@@ -1,17 +1,15 @@
 package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,9 +24,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - '''Catalog FROM a fetched document''' (`ExampleClient.java:83-104`):
   *     the whole catalog — schemas → tables → columns → source URIs —
   *     is one JSON document at `metadata-uri` (`ExampleConfig.java:32`),
-  *     fetched and MEMOIZED (`Suppliers.memoize`, `:54`) — this
-  *     connector counts fetches and its suite locks exactly one
-  *     metadata fetch per table handle however many scans run.
+  *     fetched and MEMOIZED (`Suppliers.memoize`, `:54`) — each scan
+  *     reports its document fetches (`fetches` in tasks,
+  *     `metadataFetches` while planning) and the suite locks that no
+  *     scan re-fetches the metadata of its table handle.
   *   - '''One split per source URI''' (`ExampleSplitManager.java:60-64`):
   *     a table's data is N separate documents; each becomes one split.
   *     The reference shuffles the split list to spread load across
@@ -52,14 +51,12 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ExampleHttpStore {
   private val docs = new ConcurrentHashMap[String, String]()
-  val fetches = new AtomicLong(0L)
 
   def put(uri: String, content: String): Unit = docs.put(uri, content)
   def remove(uri: String): Unit = docs.remove(uri)
   private[sources] def clearAll(): Unit = docs.clear()
 
   private[sources] def fetch(uri: String): String = {
-    fetches.incrementAndGet()
     val c = docs.get(uri)
     require(c != null, s"graft-example-http: fetch failed for '$uri'")
     c
@@ -100,79 +97,66 @@ private[sources] object ExampleCatalog {
   }
 }
 
-class ExampleHttpProvider extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-example-http"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    new ExampleHttpTable(options).schema()
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new ExampleHttpTable(new CaseInsensitiveStringMap(properties))
+class ExampleHttpProvider extends StoreProvider("graft-example-http") {
+  override protected def open(o: CaseInsensitiveStringMap,
+      schema: StructType): Table = new ExampleHttpTable(o)
 }
 
 class ExampleHttpTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
+    extends StoreTable(s"graft-example-http." +
+      s"${Option(options.get("schema")).getOrElse("example")}." +
+      options.get("table")) {
 
-  private val metadataUri = {
-    val u = options.get("metadata_uri")
-    require(u != null, "graft-example-http requires option 'metadata_uri'")
-    u
-  }
+  private val metadataUri =
+    StoreTable.option(options, "graft-example-http", "metadata_uri")
   private val schemaName = Option(options.get("schema")).getOrElse("example")
-  private val tableName = {
-    val t = options.get("table")
-    require(t != null, "graft-example-http requires option 'table'")
-    t
-  }
+  private val tableName =
+    StoreTable.option(options, "graft-example-http", "table")
+
+  @volatile private[sources] var metadataFetches = 0L
 
   // Suppliers.memoize (`ExampleClient.java:54`): the catalog document
   // is fetched ONCE per table handle, not per scan
-  private lazy val catalog: Map[(String, String), ExampleTableDef] =
+  private lazy val catalog: Map[(String, String), ExampleTableDef] = {
+    metadataFetches += 1
     ExampleCatalog.parse(ExampleHttpStore.fetch(metadataUri))
+  }
 
   private[sources] def tableDef: ExampleTableDef =
     catalog.getOrElse((schemaName, tableName),
       throw new IllegalStateException(
         s"Table $schemaName.$tableName no longer exists"))
 
-  override def name(): String =
-    s"graft-example-http.$schemaName.$tableName"
   override def schema(): StructType =
     StructType(tableDef.columns.map { case (n, dt) => StructField(n, dt) })
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new ExampleScanBuilder(this)
 }
 
 class ExampleScanBuilder(table: ExampleHttpTable)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
+    extends StoreScanBuilder[Nothing](table.schema()) {
 
-  private var required: StructType = table.schema()
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+  override protected def compile(f: Filter): Option[Nothing] = None
 
   override def build(): Scan = {
     // `ExampleSplitManager.java:55-58`: the table is re-resolved at
     // planning; a vanished table fails loudly
+    val before = table.metadataFetches
     val t = table.tableDef
-    new ExampleScan(t, table.schema(), required)
+    new ExampleScan(t, required, table.metadataFetches - before)
   }
 }
 
 final case class ExampleSplit(uri: String, full: Seq[(String, String)],
     required: Seq[String]) extends InputPartition
 
-class ExampleScan(t: ExampleTableDef, full: StructType,
-    required: StructType) extends Scan with Batch {
+class ExampleScan(t: ExampleTableDef, required: StructType,
+    metadataFetches: Long) extends StoreScan(required) {
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-example-http ${t.schema}.${t.name} sources=${t.sources.size}"
+  override protected def label: String =
+    s"graft-example-http ${t.schema}.${t.name}"
+  override protected def detail: String = s" sources=${t.sources.size}"
 
   /** One split per source URI (`:60-63`), shuffled like the reference
     * (`:64` Collections.shuffle — load spreading) but with a
@@ -186,26 +170,20 @@ class ExampleScan(t: ExampleTableDef, full: StructType,
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ExampleReaderFactory()
-}
+  override protected def driverMetrics: Seq[(String, String, Long)] =
+    Seq(("metadataFetches", "metadata documents fetched", metadataFetches))
+  override protected def taskMetrics: Seq[(String, String)] =
+    Seq("fetches" -> "data documents fetched")
 
-class ExampleReaderFactory extends PartitionReaderFactory
-    with Serializable {
-
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
+  override protected def reader: StoreScan.Reader = (p, counts) => {
     val split = p.asInstanceOf[ExampleSplit]
     val colIdx = split.full.map(_._1).zipWithIndex.toMap
     val types = split.full.toMap
-    val lines = ExampleHttpStore.fetch(split.uri)
-      .split('\n').iterator.filter(_.nonEmpty)
-
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = lines.hasNext
-      override def get(): InternalRow = {
+    counts(0) += 1
+    ExampleHttpStore.fetch(split.uri)
+      .split('\n').iterator.filter(_.nonEmpty).map { line =>
         // `ExampleRecordCursor.java:41`: comma split, trimmed results
-        val fields = lines.next().split(',').map(_.trim)
+        val fields = line.split(',').map(_.trim)
         InternalRow.fromSeq(split.required.map { name =>
           val v = fields(colIdx(name))
           types(name) match {
@@ -218,7 +196,5 @@ class ExampleReaderFactory extends PartitionReaderFactory
           }
         })
       }
-      override def close(): Unit = ()
-    }
   }
 }

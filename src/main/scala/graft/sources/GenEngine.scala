@@ -2,8 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -16,11 +16,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * A [[ClosedFormGen]] describes a table family: row counts per scale
   * factor, schemas, a monotone primary key whose predicates prune
   * GENERATION (the reference's split pruning), and per-column
-  * `row index → value` functions. The engine supplies the DataSource
-  * V2 plumbing once: column pruning, key-range pushdown, key-range
-  * splits (`parts` independent slices — a 1000-executor cluster hands
-  * each task its contiguous range), and exact
-  * SupportsReportStatistics so joins broadcast without hints.
+  * `row index → value` functions. On the shared [[StoreScan]] base the
+  * engine adds key-range pushdown, key-range splits (`parts`
+  * independent slices — a 1000-executor cluster hands each task its
+  * contiguous range), and exact statistics so joins broadcast without
+  * hints.
   */
 trait ClosedFormGen extends Serializable {
   /** connector short name, used in scan descriptions */
@@ -35,70 +35,63 @@ trait ClosedFormGen extends Serializable {
   def generator(table: String, column: String, sf: Double): Long => Any
 }
 
+/** `spark.read.format(<genName>).option("table", t)`, with optional
+  * `sf` (default 0.01) and `parts` (default 8). The generator is a
+  * `def`: Spark instantiates every registered provider on its first
+  * format lookup, and that must not initialize the generators. */
+abstract class GenProvider(genName: String) extends StoreProvider(genName) {
+  protected def gen: ClosedFormGen
+
+  override protected def open(opts: CaseInsensitiveStringMap,
+      schema: StructType): Table =
+    new GenTable(gen, StoreTable.option(opts, genName, "table").toLowerCase,
+      Option(opts.get("sf")).map(_.toDouble).getOrElse(0.01),
+      Option(opts.get("parts")).map(_.toInt).getOrElse(8))
+}
+
 class GenTable(gen: ClosedFormGen, table: String, sf: Double, parts: Int)
-    extends Table with SupportsRead {
-  override def name(): String = s"${gen.genName}.$table(sf=$sf)"
+    extends StoreTable(s"${gen.genName}.$table(sf=$sf)") {
   override def schema(): StructType = gen.schemaOf(table)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GenScanBuilder(gen, table, sf, parts)
 }
 
-/** Column pruning + key-range predicate pushdown: supported key
-  * predicates are fully absorbed (generation range narrows, Spark does
-  * NOT re-evaluate them); everything else stays with Spark. */
+/** Key-range predicate pushdown: supported key predicates are fully
+  * absorbed (generation range narrows, Spark does NOT re-evaluate
+  * them) as inclusive (lo, hi) key bounds; everything else stays with
+  * Spark. */
 class GenScanBuilder(gen: ClosedFormGen, table: String, sf: Double, parts: Int)
-    extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
+    extends StoreScanBuilder[(Long, Long)](gen.schemaOf(table)) {
 
-  private var required: StructType = gen.schemaOf(table)
-  private var pushed: Array[Filter] = Array.empty
-  private var kLo: Long = Long.MinValue
-  private var kHi: Long = Long.MaxValue
+  private val key = gen.keyColumn(table)
 
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val key = gen.keyColumn(table)
-    val (supported, rest) = filters.partition {
-      case EqualTo(c, v: Number) => c == key && v.longValue() >= 0
-      case GreaterThan(c, _: Number) => c == key
-      case GreaterThanOrEqual(c, _: Number) => c == key
-      case LessThan(c, _: Number) => c == key
-      case LessThanOrEqual(c, _: Number) => c == key
-      case _ => false
-    }
-    supported.foreach {
-      case EqualTo(_, v: Number) =>
-        kLo = math.max(kLo, v.longValue()); kHi = math.min(kHi, v.longValue())
-      case GreaterThan(_, v: Number) => kLo = math.max(kLo, v.longValue() + 1)
-      case GreaterThanOrEqual(_, v: Number) => kLo = math.max(kLo, v.longValue())
-      case LessThan(_, v: Number) => kHi = math.min(kHi, v.longValue() - 1)
-      case LessThanOrEqual(_, v: Number) => kHi = math.min(kHi, v.longValue())
-      case _ =>
-    }
-    pushed = supported
-    rest
+  override protected def compile(f: Filter): Option[(Long, Long)] = f match {
+    case EqualTo(`key`, v: Number) if v.longValue() >= 0 =>
+      Some((v.longValue(), v.longValue()))
+    case GreaterThan(`key`, v: Number) =>
+      Some((v.longValue() + 1, Long.MaxValue))
+    case GreaterThanOrEqual(`key`, v: Number) =>
+      Some((v.longValue(), Long.MaxValue))
+    case LessThan(`key`, v: Number) =>
+      Some((Long.MinValue, v.longValue() - 1))
+    case LessThanOrEqual(`key`, v: Number) =>
+      Some((Long.MinValue, v.longValue()))
+    case _ => None
   }
-  override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan =
-    new GenScan(gen, table, sf, parts, required, pushed, kLo, kHi)
+    new GenScan(gen, table, sf, parts, required, pushed,
+      queries.foldLeft(Long.MinValue)((lo, q) => math.max(lo, q._1)),
+      queries.foldLeft(Long.MaxValue)((hi, q) => math.min(hi, q._2)))
 }
 
 final case class GenRange(start: Long, end: Long) extends InputPartition
 
 class GenScan(gen: ClosedFormGen, table: String, sf: Double, parts: Int,
     required: StructType, pushed: Array[Filter], kLo: Long, kHi: Long)
-    extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+    extends StoreScan(required, pushed) {
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"${gen.genName} $table sf=$sf PushedFilters: [${pushed.mkString(", ")}]"
+  override protected def label: String = s"${gen.genName} $table sf=$sf"
 
   private def prunedRange: (Long, Long) = {
     val n = gen.rowCount(table, sf)
@@ -120,21 +113,15 @@ class GenScan(gen: ClosedFormGen, table: String, sf: Double, parts: Int,
     * broadcast-vs-shuffle picks are right without ANALYZE. Width:
     * 8 bytes per fixed field, 20 per string — only has to land the
     * broadcast threshold. */
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
+  override protected def rowCount: Option[Long] = {
     val (lo, hi) = prunedRange
-    val rows = math.max(0L, hi - lo)
-    val width = required.fields.map(_.dataType match {
+    Some(math.max(0L, hi - lo))
+  }
+  override protected def rowBytes: Long =
+    required.fields.map(_.dataType match {
       case StringType => 20L
       case _ => 8L
     }).sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * math.max(1L, width))
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
 
   override def planInputPartitions(): Array[InputPartition] = {
     val (lo, hi) = prunedRange
@@ -146,25 +133,25 @@ class GenScan(gen: ClosedFormGen, table: String, sf: Double, parts: Int,
     }.filter(r => r.end > r.start).toArray[InputPartition]
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GenReaderFactory(gen, table, sf, required.fieldNames)
+  override protected def reader: StoreScan.Reader =
+    GenScan.reader(gen, table, sf, required.fieldNames)
 }
 
-class GenReaderFactory(gen: ClosedFormGen, table: String, sf: Double,
-    columns: Array[String]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val r = partition.asInstanceOf[GenRange]
-    new PartitionReader[InternalRow] {
-      private val gens = columns.map(gen.generator(table, _, sf))
-      private var k = r.start - 1
-      override def next(): Boolean = { k += 1; k < r.end }
-      override def get(): InternalRow = {
+object GenScan {
+  def reader(gen: ClosedFormGen, table: String, sf: Double,
+      columns: Array[String]): StoreScan.Reader = (p, _) => {
+    val r = p.asInstanceOf[GenRange]
+    val gens = columns.map(gen.generator(table, _, sf))
+    new Iterator[InternalRow] {
+      private var k = r.start
+      override def hasNext: Boolean = k < r.end
+      override def next(): InternalRow = {
         val row = new GenericInternalRow(gens.length)
         var i = 0
         while (i < gens.length) { row.update(i, gens(i)(k)); i += 1 }
+        k += 1
         row
       }
-      override def close(): Unit = ()
     }
   }
 }

@@ -5,9 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types._
@@ -163,19 +162,9 @@ final case class KafkaLogOffset(offsets: Map[String, Seq[Long]])
   override def json(): String = KafkaLog.offsetsToJson(offsets)
 }
 
-class KafkaLogProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-kafka"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    KafkaLogTable.Schema
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new KafkaLogTable(new CaseInsensitiveStringMap(properties))
+class KafkaLogProvider extends StoreProvider("graft-kafka") {
+  override protected def open(o: CaseInsensitiveStringMap,
+      schema: StructType): Table = new KafkaLogTable(o)
 }
 
 object KafkaLogTable {
@@ -245,15 +234,14 @@ object KafkaLogTable {
 }
 
 class KafkaLogTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead with SupportsWrite {
+    extends StoreTable(
+      s"graft-kafka.${KafkaLogTable.subscribed(options).mkString(",")}",
+      TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_WRITE)
+    with SupportsWrite {
 
   private val topicList = KafkaLogTable.subscribed(options)
 
-  override def name(): String = s"graft-kafka.${topicList.mkString(",")}"
   override def schema(): StructType = KafkaLogTable.Schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_WRITE)
 
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
     () => new KafkaLogScan(topicList, opts)
@@ -275,12 +263,9 @@ final case class KafkaRange(topic: String, partition: Int,
     from: Long, until: Long) extends InputPartition
 
 class KafkaLogScan(topicList: Seq[String], options: CaseInsensitiveStringMap)
-    extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+    extends StoreScan(KafkaLogTable.Schema) {
 
-  override def readSchema(): StructType = KafkaLogTable.Schema
-  override def toBatch: Batch = this
-  override def description(): String =
+  override protected def label: String =
     s"graft-kafka ${topicList.mkString(",")}"
 
   private def pick(offsetKey: String, tsKey: String, default: String)
@@ -310,22 +295,13 @@ class KafkaLogScan(topicList: Seq[String], options: CaseInsensitiveStringMap)
   override def planInputPartitions(): Array[InputPartition] =
     ranges(startingOffsets, endingOffsets)
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new KafkaLogReaderFactory
+  override protected def reader: StoreScan.Reader = KafkaLogScan.reader
 
   // exact message counts from the log — the same honesty MemoryConn's
   // scan reports, so a small control topic can broadcast
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
-    val rows = ranges(startingOffsets, endingOffsets)
-      .map { case KafkaRange(_, _, f, u) => u - f }.sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 128L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
+  override protected def rowCount: Option[Long] =
+    Some(ranges(startingOffsets, endingOffsets)
+      .map { case KafkaRange(_, _, f, u) => u - f }.sum)
 
   override def toMicroBatchStream(checkpointLocation: String)
       : MicroBatchStream =
@@ -365,27 +341,22 @@ class KafkaLogMicroBatch(topicList: Seq[String], startingSpec: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new KafkaLogReaderFactory
+    new StoreReaderFactory(Array.empty, KafkaLogScan.reader)
 
   override def commit(end: Offset): Unit = () // log is never truncated
 
   override def stop(): Unit = ()
 }
 
-class KafkaLogReaderFactory extends PartitionReaderFactory with Serializable {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+object KafkaLogScan {
+  val reader: StoreScan.Reader = (p, _) => {
     val KafkaRange(topic, partition, from, until) = p.asInstanceOf[KafkaRange]
     val log = KafkaLog.partitionsOf(topic)(partition)
     val topicUtf8 = UTF8String.fromString(topic)
-    new PartitionReader[InternalRow] {
-      private var off = from - 1
-      override def next(): Boolean = { off += 1; off < until }
-      override def get(): InternalRow = {
-        val m = log.synchronized(log(off.toInt))
-        InternalRow(m.key, m.value, topicUtf8, partition, off,
-          m.tsMs * 1000L, 0) // timestampType 0 = CreateTime
-      }
-      override def close(): Unit = ()
+    Iterator.range(from.toInt, until.toInt).map { off =>
+      val m = log.synchronized(log(off))
+      InternalRow(m.key, m.value, topicUtf8, partition, off.toLong,
+        m.tsMs * 1000L, 0) // timestampType 0 = CreateTime
     }
   }
 }

@@ -1,16 +1,14 @@
 package graft.sources
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentSkipListMap}
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.hashing.MurmurHash3
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -133,11 +131,6 @@ object KuduStore {
 
   private[graft] val tables = new ConcurrentHashMap[String, KuduTable]()
 
-  /** Rows the tablet scanners actually visited — predicate evaluation
-    * happens tablet-side, so a pruned scan's delta is its tablets'
-    * rows, never the table's. */
-  val rowsScanned = new AtomicLong(0L)
-
   def create(name: String, columns: Seq[(String, DataType, Boolean)],
       pkCount: Int, hashCols: Seq[String], hashBuckets: Int,
       rangeCol: Option[String] = None,
@@ -238,45 +231,25 @@ object KuduStore {
   final case class NullPred(col: String, isNull: Boolean) extends Pred
 }
 
-class KuduTabletProvider extends TableProvider with DataSourceRegister {
-
-  override def shortName(): String = "graft-kudu"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    KuduTabletTable.schemaOf(options)
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new KuduTabletTable(new CaseInsensitiveStringMap(properties))
-}
-
-object KuduTabletTable {
-  def schemaOf(options: CaseInsensitiveStringMap): StructType = {
-    val name = options.get("table")
-    require(name != null && name.nonEmpty,
-      "graft-kudu requires option 'table'")
-    StructType(KuduStore.table(name).columns.map(c =>
-      StructField(c.name, c.dt, c.nullable)))
-  }
+class KuduTabletProvider extends StoreProvider("graft-kudu") {
+  override protected def open(o: CaseInsensitiveStringMap,
+      schema: StructType): Table = new KuduTabletTable(o)
 }
 
 class KuduTabletTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead with SupportsWrite {
+    extends StoreTable(s"graft-kudu.${options.get("table")}",
+      TableCapability.BATCH_WRITE) with SupportsWrite {
 
-  private val tableName = options.get("table")
+  private val tableName = StoreTable.option(options, "graft-kudu", "table")
   // set by KuduCatalog.loadTable: only catalog-loaded scans can have
   // their reported partitioning honored (V2ScanPartitioning resolves
   // the bucket transform through the owning catalog; bare format()
   // reads carry no catalog, so theirs is always dropped)
   private val viaCatalog = options.getBoolean("via-catalog", false)
 
-  override def name(): String = s"graft-kudu.$tableName"
-  override def schema(): StructType = KuduTabletTable.schemaOf(options)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE)
+  override def schema(): StructType =
+    StructType(KuduStore.table(tableName).columns.map(c =>
+      StructField(c.name, c.dt, c.nullable)))
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new KuduScanBuilder(tableName, schema(), viaCatalog)
@@ -289,15 +262,11 @@ class KuduTabletTable(options: CaseInsensitiveStringMap)
   * KuduPredicate analog; non-translatable filters stay residual. */
 class KuduScanBuilder(tableName: String, full: StructType,
     viaCatalog: Boolean = false)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
+    extends StoreScanBuilder[Seq[KuduStore.Pred]](full) {
 
   import KuduStore._
 
   private val t = KuduStore.table(tableName)
-  private var pushed: Array[Filter] = Array.empty
-  private var preds: Seq[Pred] = Seq.empty
-  private var required: StructType = full
 
   private def isCol(a: String) = t.colIdx.contains(a)
 
@@ -309,7 +278,7 @@ class KuduScanBuilder(tableName: String, full: StructType,
       case _ => v
     }
 
-  private def compile(f: Filter): Option[Seq[Pred]] = f match {
+  override protected def compile(f: Filter): Option[Seq[Pred]] = f match {
     case EqualTo(a, v) if isCol(a) && v != null =>
       Some(Seq(EqPred(a, norm(a, v))))
     case In(a, vs) if isCol(a) && vs.nonEmpty && !vs.contains(null) =>
@@ -332,20 +301,8 @@ class KuduScanBuilder(tableName: String, full: StructType,
     case _ => None
   }
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, residual) = filters.partition(f => compile(f).isDefined)
-    pushed = ok
-    preds = ok.flatMap(compile(_).get).toSeq
-    residual
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
   override def build(): Scan =
-    new KuduScan(tableName, preds, required, pushed, viaCatalog)
+    new KuduScan(tableName, queries.flatten, required, pushed, viaCatalog)
 }
 
 /** One scan token = one surviving tablet (`buildKuduSplits:188-193`).
@@ -362,14 +319,14 @@ final case class KuduTokenSplit(table: String, bucket: Int,
 class KuduScan(tableName: String, preds: Seq[KuduStore.Pred],
     required: StructType, pushedFilters: Array[Filter],
     viaCatalog: Boolean = false)
-    extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
+    extends StoreScan(required, pushedFilters)
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
 
   import KuduStore._
 
   private val t = KuduStore.table(tableName)
+
+  override protected def label: String = s"graft-kudu $tableName"
 
   /** STORAGE-PARTITIONED JOIN support (SPARK-37375): when the table is
     * a pure hash grid (single full range partition), every split IS one
@@ -397,38 +354,22 @@ class KuduScan(tableName: String, preds: Seq[KuduStore.Pred],
   }
 
   /** RUNTIME tablet pruning (Spark's dynamic-pruning hook for DSv2,
-    * SPARK-35779): after a join's build side executes, Spark hands the
-    * scan the build side's key values as In/EqualTo filters on the
-    * declared attributes; they prune hash buckets and range partitions
-    * exactly like planning-time predicates — the dynamic counterpart
-    * of Kudu's scan-token pruning (a selective dim join touches only
-    * the tablets holding matching keys, decided at execution). Rows
-    * are NOT re-filtered with the runtime values: pruning is an I/O
-    * optimization, the join re-applies exact semantics. */
+    * SPARK-35779): the build side's key values prune hash buckets and
+    * range partitions exactly like planning-time predicates — the
+    * dynamic counterpart of Kudu's scan-token pruning (a selective dim
+    * join touches only the tablets holding matching keys, decided at
+    * execution). */
   @volatile private var runtimePreds: Seq[Pred] = Seq.empty
 
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
+  override protected def runtimeColumns: Seq[String] =
     (t.hashCols ++ t.rangeCol.toSeq).distinct
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-      .toArray
 
-  override def filter(filters: Array[Filter]): Unit = {
+  override def filter(filters: Array[Filter]): Unit =
     runtimePreds = filters.toSeq.flatMap {
-      case org.apache.spark.sql.sources.In(c, vs) if vs.nonEmpty =>
-        Some(InPred(c, vs.toSeq))
-      case org.apache.spark.sql.sources.EqualTo(c, v) =>
-        Some(EqPred(c, v))
+      case In(c, vs) if vs.nonEmpty => Some(InPred(c, vs.toSeq))
+      case EqualTo(c, v) => Some(EqPred(c, v))
       case _ => None
     }
-  }
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-kudu $tableName " +
-      s"PushedFilters: [${pushedFilters.mkString(", ")}] cols=" +
-      required.fieldNames.mkString(",")
 
   /** Tablet pruning, Kudu's planning half: hash levels prune when
     * every hash column carries a bounded value set; range partitions
@@ -515,77 +456,66 @@ class KuduScan(tableName: String, preds: Seq[KuduStore.Pred],
       planned
     else computePlanned(preds ++ runtimePreds)
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new KuduReaderFactory(required, preds)
-
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
-    val rows = planned.map {
+  override protected def rowCount: Option[Long] =
+    Some(planned.map {
       case KuduTokenSplit(_, b, lo, hi) =>
         val tab = t.tablets.get((b, RangePart(lo, hi)))
         if (tab == null) 0L else tab.size.toLong
-    }.sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 128L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
+    }.sum)
+
+  // predicate evaluation is tablet-side, so a pruned scan counts its
+  // tablets' rows, never the table's
+  override protected def taskMetrics: Seq[(String, String)] =
+    Seq("rowsScanned" -> "tablet rows scanned")
+
+  override protected def reader: StoreScan.Reader =
+    KuduScan.reader(required, preds)
 }
 
-class KuduReaderFactory(required: StructType,
-    preds: Seq[KuduStore.Pred])
-    extends PartitionReaderFactory with Serializable {
-
+object KuduScan {
   import KuduStore._
 
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val KuduTokenSplit(name, bucket, lo, hi) =
-      p.asInstanceOf[KuduTokenSplit]
-    val t = KuduStore.table(name)
-    val tablet = t.tablets.get((bucket, RangePart(lo, hi)))
-    val rows: Iterator[Seq[Any]] =
-      if (tablet == null) Iterator.empty
-      else tablet.values().iterator().asScala
+  def reader(required: StructType, preds: Seq[Pred]): StoreScan.Reader =
+    (p, counts) => {
+      val KuduTokenSplit(name, bucket, lo, hi) =
+        p.asInstanceOf[KuduTokenSplit]
+      val t = KuduStore.table(name)
+      val tablet = t.tablets.get((bucket, RangePart(lo, hi)))
+      val rows: Iterator[Seq[Any]] =
+        if (tablet == null) Iterator.empty
+        else tablet.values().iterator().asScala
 
-    def cmp(col: String, a: Any, b: Any): Int =
-      t.columns(t.colIdx(col)).dt match {
-        case StringType => a.toString.compareTo(b.toString)
-        case LongType => java.lang.Long.compare(
-          a.asInstanceOf[Number].longValue(),
-          b.asInstanceOf[Number].longValue())
-        case DoubleType => java.lang.Double.compare(
-          a.asInstanceOf[Number].doubleValue(),
-          b.asInstanceOf[Number].doubleValue())
-        case BooleanType => java.lang.Boolean.compare(
-          a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
-        case other => sys.error(s"graft-kudu: bad type $other")
+      def cmp(col: String, a: Any, b: Any): Int =
+        t.columns(t.colIdx(col)).dt match {
+          case StringType => a.toString.compareTo(b.toString)
+          case LongType => java.lang.Long.compare(
+            a.asInstanceOf[Number].longValue(),
+            b.asInstanceOf[Number].longValue())
+          case DoubleType => java.lang.Double.compare(
+            a.asInstanceOf[Number].doubleValue(),
+            b.asInstanceOf[Number].doubleValue())
+          case BooleanType => java.lang.Boolean.compare(
+            a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
+          case other => sys.error(s"graft-kudu: bad type $other")
+        }
+
+      // the tablet-side KuduPredicate evaluation
+      def matches(values: Seq[Any]): Boolean = preds.forall { pr =>
+        val v = values(t.colIdx(pr.col))
+        pr match {
+          case NullPred(_, isNull) => (v == null) == isNull
+          case EqPred(c, x) => v != null && cmp(c, v, x) == 0
+          case InPred(c, xs) => v != null && xs.exists(cmp(c, v, _) == 0)
+          case CmpPred(c, l, lInc, h, hInc) => v != null &&
+            l.forall(b => { val d = cmp(c, v, b); d > 0 || (lInc && d == 0) }) &&
+            h.forall(b => { val d = cmp(c, v, b); d < 0 || (hInc && d == 0) })
+        }
       }
 
-    // the tablet-side KuduPredicate evaluation
-    def matches(values: Seq[Any]): Boolean = preds.forall { pr =>
-      val v = values(t.colIdx(pr.col))
-      pr match {
-        case NullPred(_, isNull) => (v == null) == isNull
-        case EqPred(c, x) => v != null && cmp(c, v, x) == 0
-        case InPred(c, xs) => v != null && xs.exists(cmp(c, v, _) == 0)
-        case CmpPred(c, l, lInc, h, hInc) => v != null &&
-          l.forall(b => { val d = cmp(c, v, b); d > 0 || (lInc && d == 0) }) &&
-          h.forall(b => { val d = cmp(c, v, b); d < 0 || (hInc && d == 0) })
-      }
-    }
-
-    val hits = rows.filter { values =>
-      KuduStore.rowsScanned.incrementAndGet()
-      matches(values)
-    }
-
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = hits.hasNext
-      override def get(): InternalRow = {
-        val values = hits.next()
+      rows.filter { values =>
+        counts(0) += 1
+        matches(values)
+      }.map { values =>
         InternalRow.fromSeq(required.fields.toSeq.map { f =>
           val v = values(t.colIdx(f.name))
           if (v == null) null
@@ -598,9 +528,7 @@ class KuduReaderFactory(required: StructType,
           }
         })
       }
-      override def close(): Unit = ()
     }
-  }
 }
 
 /** `KuduPageSink`: every row becomes an upsert by primary key. */

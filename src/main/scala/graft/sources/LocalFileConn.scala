@@ -8,9 +8,8 @@ import java.util.zip.GZIPInputStream
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder}
 import org.apache.spark.sql.sources.{Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -105,21 +104,13 @@ object LocalFileConn {
   }
 }
 
-class LocalFileTableProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-localfile"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    LocalFileConn.schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new LocalFileTable(new CaseInsensitiveStringMap(properties))
+class LocalFileTableProvider extends StoreProvider("graft-localfile") {
+  override protected def open(o: CaseInsensitiveStringMap,
+      schema: StructType): Table = new LocalFileTable(o)
 }
 
 class LocalFileTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
+    extends StoreTable(s"graft-localfile.${options.get("dir")}") {
   private val dir = {
     val d = options.get("dir")
     require(d != null, "graft-localfile requires option 'dir'")
@@ -127,44 +118,40 @@ class LocalFileTable(options: CaseInsensitiveStringMap)
   }
   private val pattern = options.getOrDefault("pattern", "*")
 
-  override def name(): String = s"graft-localfile.$dir"
   override def schema(): StructType = LocalFileConn.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
     new LocalFileScanBuilder(dir, pattern)
 }
 
+/** Accepts timestamp bounds for file-level pruning; EVERYTHING stays
+  * residual so Spark still filters row-level. Rows are parsed whole,
+  * so columns are not pruned. */
 class LocalFileScanBuilder(dir: String, pattern: String)
-    extends ScanBuilder with SupportsPushDownFilters {
+    extends StoreScanBuilder[Filter](LocalFileConn.schema) {
 
-  private var pushed: Array[Filter] = Array.empty
+  override protected def exact: Boolean = false
 
-  // Accept timestamp bounds for file-level pruning; EVERYTHING stays
-  // residual (returned back) so Spark still filters row-level.
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter {
-      case GreaterThan("timestamp", _) | GreaterThanOrEqual("timestamp", _) |
-           LessThan("timestamp", _) | LessThanOrEqual("timestamp", _) => true
-      case _ => false
-    }
-    filters
+  override protected def compile(f: Filter): Option[Filter] = f match {
+    case GreaterThan("timestamp", _) | GreaterThanOrEqual("timestamp", _) |
+         LessThan("timestamp", _) | LessThanOrEqual("timestamp", _) => Some(f)
+    case _ => None
   }
-  override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan = new LocalFileScan(dir, pattern, pushed)
+  override def pruneColumns(requiredSchema: StructType): Unit = ()
+
+  override def build(): Scan =
+    new LocalFileScan(dir, pattern, queries.toArray)
 }
 
 final case class LocalFileSplit(path: String) extends InputPartition
 
-class LocalFileScan(dir: String, pattern: String, pushed: Array[Filter])
-    extends Scan with Batch {
+class LocalFileScan(dir: String, pattern: String, pruning: Array[Filter])
+    extends StoreScan(LocalFileConn.schema) {
 
-  override def readSchema(): StructType = LocalFileConn.schema
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-localfile $dir pushed=[${pushed.mkString(", ")}]"
+  override protected def label: String = s"graft-localfile $dir"
+  override protected def detail: String =
+    s" pruning=[${pruning.mkString(", ")}]"
 
   private def tsMicros(v: Any): Long = v match {
     case t: java.sql.Timestamp => t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
@@ -174,7 +161,7 @@ class LocalFileScan(dir: String, pattern: String, pushed: Array[Filter])
 
   /** Upper bound from the pushed timestamp predicates, if any. */
   private def upperBound: Option[Long] = {
-    val ubs = pushed.collect {
+    val ubs = pruning.collect {
       case LessThan("timestamp", v) => tsMicros(v)
       case LessThanOrEqual("timestamp", v) => tsMicros(v)
     }
@@ -201,25 +188,28 @@ class LocalFileScan(dir: String, pattern: String, pushed: Array[Filter])
     kept.map(f => LocalFileSplit(f.getAbsolutePath)).toArray[InputPartition]
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new LocalFileReaderFactory
+  override protected def reader: StoreScan.Reader = LocalFileScan.reader
 }
 
-class LocalFileReaderFactory extends PartitionReaderFactory with Serializable {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+object LocalFileScan {
+  val reader: StoreScan.Reader = (p, _) => {
     val path = p.asInstanceOf[LocalFileSplit].path
     val node = JmxConn.nodeId
-    new PartitionReader[InternalRow] {
-      private val reader = LocalFileConn.open(path)
-      private var current: InternalRow = _
-      override def next(): Boolean = {
-        var line = reader.readLine()
-        while (line != null && line.trim.isEmpty) line = reader.readLine()
-        if (line == null) false
-        else { current = LocalFileConn.parse(line, node); true }
+    new Iterator[InternalRow] with AutoCloseable {
+      private val in = LocalFileConn.open(path)
+      private var line = advance()
+      private def advance(): String = {
+        var l = in.readLine()
+        while (l != null && l.trim.isEmpty) l = in.readLine()
+        l
       }
-      override def get(): InternalRow = current
-      override def close(): Unit = reader.close()
+      override def hasNext: Boolean = line != null
+      override def next(): InternalRow = {
+        val row = LocalFileConn.parse(line, node)
+        line = advance()
+        row
+      }
+      override def close(): Unit = in.close()
     }
   }
 }

@@ -5,9 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{InputPartition, ScanBuilder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -60,16 +59,11 @@ object MemoryConn {
     }
 }
 
-class MemoryTableProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
+class MemoryTableProvider
+    extends StoreProvider("graft-memory", externalSchema = true) {
 
-  override def shortName(): String = "graft-memory"
-
-  private def name(options: CaseInsensitiveStringMap): String = {
-    val n = options.get("name")
-    require(n != null, "graft-memory requires option 'name'")
-    n
-  }
+  private def name(options: CaseInsensitiveStringMap): String =
+    StoreTable.option(options, "graft-memory", "name")
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val t = MemoryConn.store.get(name(options))
@@ -78,20 +72,14 @@ class MemoryTableProvider extends TableProvider
     t._1
   }
 
-  override def supportsExternalMetadata(): Boolean = true
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new MemoryTable(name(new CaseInsensitiveStringMap(properties)), schema)
+  override protected def open(o: CaseInsensitiveStringMap,
+      schema: StructType): Table = new MemoryTable(name(o), schema)
 }
 
 class MemoryTable(name: String, schema0: StructType)
-    extends Table with SupportsRead with SupportsWrite {
-  override def name(): String = s"graft-memory.$name"
+    extends StoreTable(s"graft-memory.$name", TableCapability.BATCH_WRITE,
+      TableCapability.TRUNCATE) with SupportsWrite {
   override def schema(): StructType = schema0
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     () => new MemoryScan(name, schema0)
@@ -102,30 +90,21 @@ class MemoryTable(name: String, schema0: StructType)
 
 final case class MemoryChunk(chunk: Int) extends InputPartition
 
-class MemoryScan(name: String, schema0: StructType) extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-  override def readSchema(): StructType = schema0
-  override def toBatch: Batch = this
-  override def description(): String = s"graft-memory $name"
+class MemoryScan(name: String, schema0: StructType) extends StoreScan(schema0) {
+  override protected def label: String = s"graft-memory $name"
 
   // exact cardinality from the page store (the reference's memory
   // connector serves getTableStatistics the same way) — fixture-sized
   // tables then broadcast without ANALYZE
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
+  override protected def rowCount: Option[Long] = {
     val t = MemoryConn.store.get(name)
-    val rows = if (t == null) 0L else t._2.map(_.length.toLong).sum
-    val width = schema0.fields.map(f => f.dataType match {
+    Some(if (t == null) 0L else t._2.map(_.length.toLong).sum)
+  }
+  override protected def rowBytes: Long =
+    schema0.fields.map(f => f.dataType match {
       case org.apache.spark.sql.types.StringType => 20L
       case _ => 8L
     }).sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * math.max(1L, width))
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
 
   override def planInputPartitions(): Array[InputPartition] = {
     val t = MemoryConn.store.get(name)
@@ -133,23 +112,14 @@ class MemoryScan(name: String, schema0: StructType) extends Scan with Batch
     t._2.indices.map(MemoryChunk(_)).toArray[InputPartition]
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new MemoryReaderFactory(name)
+  override protected def reader: StoreScan.Reader = MemoryScan.reader(name)
 }
 
-/** Standalone (serializable) factory: tasks look the chunk up in the
-  * JVM-wide store — local-mode / same-JVM semantics, per the header. */
-class MemoryReaderFactory(name: String)
-    extends PartitionReaderFactory with Serializable {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val rows = MemoryConn.store.get(name)._2(p.asInstanceOf[MemoryChunk].chunk)
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = rows(i)
-      override def close(): Unit = ()
-    }
-  }
+/** Tasks look the chunk up in the JVM-wide store — local-mode /
+  * same-JVM semantics, per the header. */
+object MemoryScan {
+  def reader(name: String): StoreScan.Reader = (p, _) =>
+    MemoryConn.store.get(name)._2(p.asInstanceOf[MemoryChunk].chunk).iterator
 }
 
 class MemoryWriteBuilder(name: String, schema: StructType)

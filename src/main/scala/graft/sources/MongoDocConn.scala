@@ -6,9 +6,8 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -138,36 +137,20 @@ object MongoStore {
     }
 }
 
-class MongoDocProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-mongo"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val name = options.get("collection")
-    require(name != null && name.nonEmpty,
-      "graft-mongo requires option 'collection'")
-    MongoStore.inferSchema(name)
-  }
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new MongoDocTable(new CaseInsensitiveStringMap(properties))
+class MongoDocProvider extends StoreProvider("graft-mongo") {
+  override protected def open(o: CaseInsensitiveStringMap,
+      schema: StructType): Table = new MongoDocTable(o)
 }
 
 class MongoDocTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead with SupportsWrite {
+    extends StoreTable(s"graft-mongo.${options.get("collection")}",
+      TableCapability.BATCH_WRITE) with SupportsWrite {
 
-  private val collName = options.get("collection")
+  private val collName =
+    StoreTable.option(options, "graft-mongo", "collection")
   private val inferred = MongoStore.inferSchema(collName)
 
-  override def name(): String = s"graft-mongo.$collName"
   override def schema(): StructType = inferred
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new MongoScanBuilder(collName, inferred)
@@ -191,8 +174,7 @@ class MongoDocTable(options: CaseInsensitiveStringMap)
   * only (nested paths stay residual, like predicates outside the
   * reference's TupleDomain). */
 class MongoScanBuilder(collName: String, full: StructType)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
+    extends StoreScanBuilder[MongoStore.MQuery](full) {
 
   private def scalarField(f: String): Boolean =
     full.fields.exists(sf => sf.name == f && (sf.dataType match {
@@ -200,39 +182,24 @@ class MongoScanBuilder(collName: String, full: StructType)
       case _ => false
     }))
 
-  private var pushed: Array[Filter] = Array.empty
-  private var queries: Seq[MongoStore.MQuery] = Seq.empty
-  private var required: StructType = full
-
-  private def compile(f: Filter): Option[MongoStore.MQuery] = f match {
-    case EqualTo(a, v) if scalarField(a) && v != null =>
-      Some(MongoStore.MEq(a, v))
-    case In(a, vs) if scalarField(a) && vs.nonEmpty && !vs.contains(null) =>
-      Some(MongoStore.MIn(a, vs.toSeq))
-    case GreaterThan(a, v) if scalarField(a) && v != null =>
-      Some(MongoStore.MRange(a, Some(v), false, None, false))
-    case GreaterThanOrEqual(a, v) if scalarField(a) && v != null =>
-      Some(MongoStore.MRange(a, Some(v), true, None, false))
-    case LessThan(a, v) if scalarField(a) && v != null =>
-      Some(MongoStore.MRange(a, None, false, Some(v), false))
-    case LessThanOrEqual(a, v) if scalarField(a) && v != null =>
-      Some(MongoStore.MRange(a, None, false, Some(v), true))
-    case IsNull(a) if scalarField(a) => Some(MongoStore.MExists(a, false))
-    case IsNotNull(a) if scalarField(a) => Some(MongoStore.MExists(a, true))
-    case _ => None
-  }
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, residual) = filters.partition(f => compile(f).isDefined)
-    pushed = ok
-    queries = ok.flatMap(compile(_)).toSeq
-    residual
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+  override protected def compile(f: Filter): Option[MongoStore.MQuery] =
+    f match {
+      case EqualTo(a, v) if scalarField(a) && v != null =>
+        Some(MongoStore.MEq(a, v))
+      case In(a, vs) if scalarField(a) && vs.nonEmpty && !vs.contains(null) =>
+        Some(MongoStore.MIn(a, vs.toSeq))
+      case GreaterThan(a, v) if scalarField(a) && v != null =>
+        Some(MongoStore.MRange(a, Some(v), false, None, false))
+      case GreaterThanOrEqual(a, v) if scalarField(a) && v != null =>
+        Some(MongoStore.MRange(a, Some(v), true, None, false))
+      case LessThan(a, v) if scalarField(a) && v != null =>
+        Some(MongoStore.MRange(a, None, false, Some(v), false))
+      case LessThanOrEqual(a, v) if scalarField(a) && v != null =>
+        Some(MongoStore.MRange(a, None, false, Some(v), true))
+      case IsNull(a) if scalarField(a) => Some(MongoStore.MExists(a, false))
+      case IsNotNull(a) if scalarField(a) => Some(MongoStore.MExists(a, true))
+      case _ => None
+    }
 
   override def build(): Scan =
     new MongoScan(collName, queries, required, pushed)
@@ -243,38 +210,25 @@ final case class MongoCollSplit(coll: String,
     queries: Seq[MongoStore.MQuery]) extends InputPartition
 
 class MongoScan(collName: String, queries: Seq[MongoStore.MQuery],
-    required: StructType, pushedFilters: Array[Filter]) extends Scan
-    with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+    required: StructType, pushedFilters: Array[Filter])
+    extends StoreScan(required, pushedFilters) {
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-mongo $collName " +
-      s"PushedFilters: [${pushedFilters.mkString(", ")}] " +
-      "cols=" + required.fieldNames.mkString(",")
+  override protected def label: String = s"graft-mongo $collName"
 
   override def planInputPartitions(): Array[InputPartition] =
     Array(MongoCollSplit(collName, queries))
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new MongoReaderFactory(required)
-
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
+  override protected def rowCount: Option[Long] = {
     val coll = MongoStore.collection(collName)
-    val rows = coll.synchronized(
-      coll.count(d => queries.forall(MongoStore.matches(d, _))).toLong)
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 256L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
+    Some(coll.synchronized(
+      coll.count(d => queries.forall(MongoStore.matches(d, _))).toLong))
   }
+  override protected def rowBytes: Long = 256L
+
+  override protected def reader: StoreScan.Reader = MongoScan.reader(required)
 }
 
-object MongoReaderFactory {
+object MongoScan {
   /** Document value -> Catalyst value for the target type; a value
     * whose shape no longer matches the guessed schema reads NULL (the
     * schema-on-read tolerance Mongo users expect). */
@@ -292,27 +246,14 @@ object MongoReaderFactory {
         convert(doc.getOrElse(f.name, null), f.dataType)))
     case _ => null
   }
-}
 
-class MongoReaderFactory(required: StructType)
-    extends PartitionReaderFactory with Serializable {
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+  def reader(required: StructType): StoreScan.Reader = (p, _) => {
     val MongoCollSplit(coll, queries) = p.asInstanceOf[MongoCollSplit]
-    val docs = {
-      val c = MongoStore.collection(coll)
-      c.synchronized(c.toVector)
-    }.iterator.filter(d => queries.forall(MongoStore.matches(d, _)))
-    new PartitionReader[InternalRow] {
-      private var cur: Map[String, Any] = _
-      override def next(): Boolean =
-        if (docs.hasNext) { cur = docs.next(); true } else false
-      override def get(): InternalRow =
-        InternalRow.fromSeq(required.fields.toSeq.map(f =>
-          MongoReaderFactory.convert(
-            cur.getOrElse(f.name, null), f.dataType)))
-      override def close(): Unit = ()
-    }
+    val c = MongoStore.collection(coll)
+    c.synchronized(c.toVector).iterator
+      .filter(d => queries.forall(MongoStore.matches(d, _)))
+      .map(d => InternalRow.fromSeq(required.fields.toSeq.map(f =>
+        convert(d.getOrElse(f.name, null), f.dataType))))
   }
 }
 

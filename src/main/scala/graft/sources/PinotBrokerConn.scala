@@ -1,16 +1,15 @@
 package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expression => VExpression, NamedReference, SortDirection, SortOrder, Transform}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.expressions.{Expression => VExpression, NamedReference, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Avg, Count, CountStar, Max, Min, Sum}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN}
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownLimit, SupportsPushDownTopN}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -84,11 +83,6 @@ object PinotStore {
   }
 
   private[graft] val tables = new ConcurrentHashMap[String, PinotTable]()
-
-  /** Rows that crossed the store->Spark boundary. For a pushed
-    * aggregation this rises by the number of RESULT rows — the
-    * broker-mode proof the suite locks. */
-  val rowsReturned = new AtomicLong(0L)
 
   def create(name: String, columns: Seq[(String, DataType)],
       servers: Int = 3): Unit = {
@@ -329,33 +323,17 @@ object PinotStore {
   }
 }
 
-class PinotBrokerProvider extends TableProvider with DataSourceRegister {
-
-  override def shortName(): String = "graft-pinot"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val name = options.get("table")
-    require(name != null && name.nonEmpty,
-      "graft-pinot requires option 'table'")
-    PinotStore.table(name).schema
-  }
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new PinotBrokerTable(new CaseInsensitiveStringMap(properties))
+class PinotBrokerProvider extends StoreProvider("graft-pinot") {
+  override protected def open(o: CaseInsensitiveStringMap,
+      schema: StructType): Table = new PinotBrokerTable(o)
 }
 
 class PinotBrokerTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
+    extends StoreTable(s"graft-pinot.${options.get("table")}") {
 
-  private val tableName = options.get("table")
+  private val tableName = StoreTable.option(options, "graft-pinot", "table")
 
-  override def name(): String = s"graft-pinot.$tableName"
   override def schema(): StructType = PinotStore.table(tableName).schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new PinotScanBuilder(tableName)
@@ -366,19 +344,17 @@ class PinotBrokerTable(options: CaseInsensitiveStringMap)
   * COMPLETE — the broker answers finals — and flips the split plan to
   * one broker split. */
 class PinotScanBuilder(tableName: String)
-    extends ScanBuilder with SupportsPushDownFilters
+    extends StoreScanBuilder[Seq[PinotStore.PPred]](
+      PinotStore.table(tableName).schema)
     with SupportsPushDownAggregates with SupportsPushDownLimit
-    with SupportsPushDownTopN with SupportsPushDownRequiredColumns {
+    with SupportsPushDownTopN {
 
   import PinotStore._
 
   private val t = PinotStore.table(tableName)
-  private var pushed: Array[Filter] = Array.empty
-  private var preds: Seq[PPred] = Seq.empty
   private var agg: Option[PAgg] = None
   private var topN: Option[PTopN] = None
   private var limit: Option[Int] = None
-  private var required: StructType = t.schema
 
   private def isCol(a: String) = t.colIdx.contains(a)
   private def norm(col: String, v: Any): Any =
@@ -389,7 +365,7 @@ class PinotScanBuilder(tableName: String)
       case _ => v
     }
 
-  private def compile(f: Filter): Option[Seq[PPred]] = f match {
+  override protected def compile(f: Filter): Option[Seq[PPred]] = f match {
     case EqualTo(a, v) if isCol(a) && v != null =>
       Some(Seq(PEq(a, norm(a, v))))
     case In(a, vs) if isCol(a) && vs.nonEmpty && !vs.contains(null) =>
@@ -411,15 +387,6 @@ class PinotScanBuilder(tableName: String)
       }
     case _ => None
   }
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, residual) = filters.partition(f => compile(f).isDefined)
-    pushed = ok
-    preds = ok.flatMap(compile(_).get).toSeq
-    residual
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
 
   private def fieldOf(e: VExpression): Option[String] = e match {
     case nr: NamedReference if nr.fieldNames().length == 1 =>
@@ -510,7 +477,7 @@ class PinotScanBuilder(tableName: String)
     if (agg.isEmpty) required = requiredSchema
 
   override def build(): Scan =
-    new PinotScan(tableName, PinotQuery(preds, agg, topN, limit),
+    new PinotScan(tableName, PinotQuery(queries.flatten, agg, topN, limit),
       required, pushed)
 }
 
@@ -524,19 +491,15 @@ final case class PinotSegmentSplit(table: String, segmentId: Int,
 
 class PinotScan(tableName: String, query: PinotStore.PinotQuery,
     required: StructType, pushedFilters: Array[Filter])
-    extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+    extends StoreScan(required, pushedFilters) {
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
+  override protected def label: String =
     s"graft-pinot $tableName mode=" +
-      (if (query.isBrokerQuery) "broker" else "segment") +
-      s" PushedFilters: [${pushedFilters.mkString(", ")}]" +
-      s" PushedAggregation: ${query.agg.isDefined}" +
+      (if (query.isBrokerQuery) "broker" else "segment")
+  override protected def detail: String =
+    s" PushedAggregation: ${query.agg.isDefined}" +
       s" PushedTopN: ${query.topN.isDefined}" +
-      s" PushedLimit: ${query.limit.isDefined}" +
-      " cols=" + required.fieldNames.mkString(",")
+      s" PushedLimit: ${query.limit.isDefined}"
 
   /** The `:189-192` choice: broker split when the query compiled. */
   override def planInputPartitions(): Array[InputPartition] = {
@@ -549,29 +512,23 @@ class PinotScan(tableName: String, query: PinotStore.PinotQuery,
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PinotReaderFactory(required)
-
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
+  override protected def rowCount: Option[Long] = {
     val t = PinotStore.table(tableName)
-    val rows = t.synchronized(t.segments.map(_.rows.length.toLong).sum)
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 128L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
+    Some(t.synchronized(t.segments.map(_.rows.length.toLong).sum))
   }
+
+  // rows that crossed the store->Spark boundary: for a pushed
+  // aggregation, the RESULT rows — the broker-mode proof
+  override protected def taskMetrics: Seq[(String, String)] =
+    Seq("rowsReturned" -> "rows returned by the store")
+
+  override protected def reader: StoreScan.Reader = PinotScan.reader(required)
 }
 
-class PinotReaderFactory(required: StructType)
-    extends PartitionReaderFactory with Serializable {
-
+object PinotScan {
   import PinotStore._
 
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
+  def reader(required: StructType): StoreScan.Reader = (p, counts) => {
     val out: Iterator[Seq[Any]] = p match {
       case PinotBrokerSplit(name, q) =>
         val t = PinotStore.table(name)
@@ -585,24 +542,18 @@ class PinotReaderFactory(required: StructType)
           .filter(r => q.preds.forall(evalPred(t, r, _)))
           .map(r => required.fields.toSeq.map(f => r(t.colIdx(f.name))))
     }
-    new PartitionReader[InternalRow] {
-      private var cur: Seq[Any] = _
-      override def next(): Boolean =
-        if (out.hasNext) { cur = out.next(); true } else false
-      override def get(): InternalRow = {
-        PinotStore.rowsReturned.incrementAndGet()
-        InternalRow.fromSeq(cur.zip(required.fields.toSeq).map {
-          case (null, _) => null
-          case (v, f) => f.dataType match {
-            case StringType => UTF8String.fromString(v.toString)
-            case LongType => v.asInstanceOf[Number].longValue()
-            case DoubleType => v.asInstanceOf[Number].doubleValue()
-            case BooleanType => v.asInstanceOf[Boolean]
-            case other => sys.error(s"graft-pinot: bad type $other")
-          }
-        })
-      }
-      override def close(): Unit = ()
+    out.map { cur =>
+      counts(0) += 1
+      InternalRow.fromSeq(cur.zip(required.fields.toSeq).map {
+        case (null, _) => null
+        case (v, f) => f.dataType match {
+          case StringType => UTF8String.fromString(v.toString)
+          case LongType => v.asInstanceOf[Number].longValue()
+          case DoubleType => v.asInstanceOf[Number].doubleValue()
+          case BooleanType => v.asInstanceOf[Boolean]
+          case other => sys.error(s"graft-pinot: bad type $other")
+        }
+      })
     }
   }
 }

@@ -6,9 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{InputPartition, ScanBuilder}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -154,19 +153,9 @@ object RedisStore {
   }
 }
 
-class RedisKvProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-
-  override def shortName(): String = "graft-redis"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    RedisKvTable.Schema
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new RedisKvTable(new CaseInsensitiveStringMap(properties))
+class RedisKvProvider extends StoreProvider("graft-redis") {
+  override protected def open(o: CaseInsensitiveStringMap,
+      schema: StructType): Table = new RedisKvTable(o)
 }
 
 object RedisKvTable {
@@ -238,14 +227,13 @@ object RedisKvTable {
 }
 
 class RedisKvTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
+    extends StoreTable("graft-redis." +
+      s"${Option(options.get("schema")).getOrElse("default")}." +
+      options.get("table")) {
 
   private val opts = RedisKvTable.parse(options)
 
-  override def name(): String = s"graft-redis.${opts.schema}.${opts.table}"
   override def schema(): StructType = RedisKvTable.Schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     () => new RedisKvScan(opts)
@@ -259,14 +247,13 @@ final case class RedisZRange(keyName: String, start: Long, end: Long,
 final case class RedisScanAll(matchGlob: Option[String],
     valueFormat: String) extends InputPartition
 
-class RedisKvScan(opts: RedisKvTable.Opts) extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+class RedisKvScan(opts: RedisKvTable.Opts)
+    extends StoreScan(RedisKvTable.Schema) {
 
-  override def readSchema(): StructType = RedisKvTable.Schema
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-redis ${opts.schema}.${opts.table} key=${opts.keyFormat} " +
-      s"value=${opts.valueFormat}"
+  override protected def label: String =
+    s"graft-redis ${opts.schema}.${opts.table}"
+  override protected def detail: String =
+    s" key=${opts.keyFormat} value=${opts.valueFormat}"
 
   override def planInputPartitions(): Array[InputPartition] =
     if (opts.keyFormat == "zset")
@@ -276,64 +263,43 @@ class RedisKvScan(opts: RedisKvTable.Opts) extends Scan with Batch
         }.toArray
     else Array(RedisScanAll(opts.matchGlob, opts.valueFormat))
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new RedisKvReaderFactory
-
   // exact key counts from the store — lets a small control table
   // broadcast, same honesty as the kafka/memory scans
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
-    val rows =
-      if (opts.keyFormat == "zset") RedisStore.zcard(opts.keyName)
-      else RedisStore.scanKeys(opts.matchGlob).length.toLong
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows * 256L)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
+  override protected def rowCount: Option[Long] =
+    Some(if (opts.keyFormat == "zset") RedisStore.zcard(opts.keyName)
+    else RedisStore.scanKeys(opts.matchGlob).length.toLong)
+  override protected def rowBytes: Long = 256L
+
+  override protected def reader: StoreScan.Reader = RedisKvScan.reader
 }
 
-class RedisKvReaderFactory extends PartitionReaderFactory with Serializable {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+object RedisKvScan {
+  val reader: StoreScan.Reader = (p, _) => {
     val (keys, valueFormat) = p match {
       case RedisZRange(k, s, e, vf) => (RedisStore.zrange(k, s, e), vf)
       case RedisScanAll(glob, vf) => (RedisStore.scanKeys(glob), vf)
     }
-    new PartitionReader[InternalRow] {
-      private val it = keys.iterator
-      private var row: InternalRow = _
-      override def next(): Boolean = {
-        row = null
-        while (row == null && it.hasNext) {
-          val k = it.next()
-          val kUtf = UTF8String.fromString(k)
-          if (valueFormat == "hash") {
-            // a key deleted (or re-typed) between discovery and fetch
-            // skips the row — RedisRecordCursor.java:343-349
-            RedisStore.hgetAll(k).foreach { m =>
-              val entries = m.toSeq.sortBy(_._1)
-              val vlen = entries.map { case (f, v) =>
-                f.length.toLong + v.length.toLong
-              }.sum
-              row = InternalRow(kUtf, null,
-                ArrayBasedMapData(
-                  entries.map(e => UTF8String.fromString(e._1)).toArray,
-                  entries.map(e => UTF8String.fromString(e._2)).toArray),
-                k.length.toLong, vlen)
-            }
-          } else {
-            RedisStore.get(k).foreach { v =>
-              row = InternalRow(kUtf, UTF8String.fromString(v), null,
-                k.length.toLong, v.length.toLong)
-            }
-          }
+    keys.iterator.flatMap { k =>
+      val kUtf = UTF8String.fromString(k)
+      // a key deleted (or re-typed) between discovery and fetch skips
+      // the row — RedisRecordCursor.java:343-349
+      if (valueFormat == "hash")
+        RedisStore.hgetAll(k).map { m =>
+          val entries = m.toSeq.sortBy(_._1)
+          val vlen = entries.map { case (f, v) =>
+            f.length.toLong + v.length.toLong
+          }.sum
+          InternalRow(kUtf, null,
+            ArrayBasedMapData(
+              entries.map(e => UTF8String.fromString(e._1)).toArray,
+              entries.map(e => UTF8String.fromString(e._2)).toArray),
+            k.length.toLong, vlen)
         }
-        row != null
-      }
-      override def get(): InternalRow = row
-      override def close(): Unit = ()
+      else
+        RedisStore.get(k).map { v =>
+          InternalRow(kUtf, UTF8String.fromString(v), null,
+            k.length.toLong, v.length.toLong)
+        }
     }
   }
 }

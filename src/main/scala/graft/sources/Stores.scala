@@ -18,7 +18,6 @@ package graft.sources
 object Stores {
   def releaseAll(): Unit = {
     AccStore.tables.clear()
-    AccStore.familyCells.clear()
     AtopLogStore.clearAll()
     CassStore.tables.clear()
     DruidStore.datasources.clear()

@@ -1,12 +1,10 @@
 package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.connector.read.{InputPartition, Scan, ScanBuilder}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -94,11 +92,6 @@ object ThriftRegistry {
   private[graft] val services =
     new ConcurrentHashMap[String, GraftThriftService]()
 
-  /** Calls observed per method — the paging-contract proof the suite
-    * locks (split batches drained N times, rows paged M times). */
-  val splitCalls = new AtomicLong(0L)
-  val rowsCalls = new AtomicLong(0L)
-
   def register(name: String, svc: GraftThriftService): Unit =
     services.put(name, svc)
   def drop(name: String): Unit = services.remove(name)
@@ -110,48 +103,32 @@ object ThriftRegistry {
   }
 }
 
-class ThriftSvcProvider extends TableProvider with DataSourceRegister {
-
-  override def shortName(): String = "graft-thrift"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ThriftSvcTable.schemaOf(options)
-
-  override def supportsExternalMetadata(): Boolean = false
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new ThriftSvcTable(new CaseInsensitiveStringMap(properties))
+class ThriftSvcProvider extends StoreProvider("graft-thrift") {
+  override protected def open(o: CaseInsensitiveStringMap,
+      schema: StructType): Table = new ThriftSvcTable(o)
 }
 
-object ThriftSvcTable {
-  def schemaOf(options: CaseInsensitiveStringMap): StructType = {
-    val svc = options.get("service"); val schema = options.get("schema")
-    val table = options.get("table")
-    require(svc != null && schema != null && table != null,
-      "graft-thrift requires options 'service', 'schema', 'table'")
-    val st = ThriftRegistry.service(svc).getTableMetadata(schema, table)
+class ThriftSvcTable(options: CaseInsensitiveStringMap)
+    extends StoreTable(s"graft-thrift.${options.get("service")}." +
+      s"${options.get("schema")}.${options.get("table")}") {
+
+  private val svc = options.get("service")
+  private val schemaName = options.get("schema")
+  private val tableName = options.get("table")
+  require(svc != null && schemaName != null && tableName != null,
+    "graft-thrift requires options 'service', 'schema', 'table'")
+
+  override def schema(): StructType = {
+    val st = ThriftRegistry.service(svc).getTableMetadata(schemaName, tableName)
     st.fields.foreach(f => require(
       f.dataType == StringType || f.dataType == LongType ||
         f.dataType == DoubleType || f.dataType == BooleanType,
       s"graft-thrift: unsupported type ${f.dataType.catalogString}"))
     st
   }
-}
-
-class ThriftSvcTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-
-  override def name(): String =
-    s"graft-thrift.${options.get("service")}." +
-      s"${options.get("schema")}.${options.get("table")}"
-  override def schema(): StructType = ThriftSvcTable.schemaOf(options)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new ThriftScanBuilder(options.get("service"), options.get("schema"),
-      options.get("table"), schema(),
+    new ThriftScanBuilder(svc, schemaName, tableName, schema(),
       Option(options.get("max_split_count")).map(_.toInt).getOrElse(100),
       Option(options.get("max_response_bytes")).map(_.toLong)
         .getOrElse(16L * 1024 * 1024)) // ThriftConnectorConfig default
@@ -163,34 +140,24 @@ class ThriftSvcTable(options: CaseInsensitiveStringMap)
   * the remote service honoring the hint. */
 class ThriftScanBuilder(svc: String, schemaName: String, tableName: String,
     full: StructType, maxSplitCount: Int, maxBytes: Long)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
+    extends StoreScanBuilder[ThriftApi.Hint](full) {
 
   import ThriftApi._
 
-  private var hints: Seq[Hint] = Seq.empty
-  private var required: StructType = full
+  override protected def exact: Boolean = false
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    hints = filters.toSeq.flatMap {
-      case EqualTo(a, v) if v != null => Seq(EqHint(a, Seq(v)))
-      case In(a, vs) if vs.nonEmpty => Seq(EqHint(a, vs.toSeq))
-      case GreaterThan(a, v) => Seq(RangeHint(a, Some(v), None))
-      case GreaterThanOrEqual(a, v) => Seq(RangeHint(a, Some(v), None))
-      case LessThan(a, v) => Seq(RangeHint(a, None, Some(v)))
-      case LessThanOrEqual(a, v) => Seq(RangeHint(a, None, Some(v)))
-      case _ => Seq.empty
-    }
-    filters // ALL residual — the hint is advisory, never enforced
+  override protected def compile(f: Filter): Option[Hint] = f match {
+    case EqualTo(a, v) if v != null => Some(EqHint(a, Seq(v)))
+    case In(a, vs) if vs.nonEmpty => Some(EqHint(a, vs.toSeq))
+    case GreaterThan(a, v) => Some(RangeHint(a, Some(v), None))
+    case GreaterThanOrEqual(a, v) => Some(RangeHint(a, Some(v), None))
+    case LessThan(a, v) => Some(RangeHint(a, None, Some(v)))
+    case LessThanOrEqual(a, v) => Some(RangeHint(a, None, Some(v)))
+    case _ => None
   }
 
-  override def pushedFilters(): Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
   override def build(): Scan =
-    new ThriftScan(svc, schemaName, tableName, hints, required,
+    new ThriftScan(svc, schemaName, tableName, queries, required,
       maxSplitCount, maxBytes)
 }
 
@@ -202,13 +169,12 @@ final case class ThriftSplit(svc: String, splitId: Array[Byte],
 
 class ThriftScan(svc: String, schemaName: String, tableName: String,
     hints: Seq[ThriftApi.Hint], required: StructType,
-    maxSplitCount: Int, maxBytes: Long) extends Scan with Batch {
+    maxSplitCount: Int, maxBytes: Long) extends StoreScan(required) {
 
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-thrift $schemaName.$tableName hints=${hints.size} cols=" +
-      required.fieldNames.mkString(",")
+  @volatile private var splitCalls = 0L
+
+  override protected def label: String = s"graft-thrift $schemaName.$tableName"
+  override protected def detail: String = s" hints=${hints.size}"
 
   /** The `ThriftSplitSource.getNextBatch:132-152` drain loop: batches
     * of at most maxSplitCount splits, chained by continuation token
@@ -220,7 +186,7 @@ class ThriftScan(svc: String, schemaName: String, tableName: String,
     var first = true
     while (first || token.isDefined) {
       first = false
-      ThriftRegistry.splitCalls.incrementAndGet()
+      splitCalls += 1
       val batch = service.getSplits(schemaName, tableName,
         Some(required.fieldNames.toSeq), hints, maxSplitCount, token)
       require(batch.splitIds.size <= maxSplitCount,
@@ -235,15 +201,18 @@ class ThriftScan(svc: String, schemaName: String, tableName: String,
     out.result().toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ThriftReaderFactory(required)
+  // calls per service method — the paging-contract proof (split
+  // batches drained on the driver, row pages fetched in tasks)
+  override protected def driverMetrics: Seq[(String, String, Long)] =
+    Seq(("splitCalls", "getSplits calls", splitCalls))
+  override protected def taskMetrics: Seq[(String, String)] =
+    Seq("rowsCalls" -> "getRows calls")
+
+  override protected def reader: StoreScan.Reader = ThriftScan.reader(required)
 }
 
-class ThriftReaderFactory(required: StructType)
-    extends PartitionReaderFactory with Serializable {
-
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
+object ThriftScan {
+  def reader(required: StructType): StoreScan.Reader = (p, counts) => {
     val split = p.asInstanceOf[ThriftSplit]
     val service = ThriftRegistry.service(split.svc)
 
@@ -257,7 +226,7 @@ class ThriftReaderFactory(required: StructType)
         while (!exhausted && (page == null || i >= page.rows.length)) {
           if (page != null && page.nextToken.isEmpty) { exhausted = true }
           else {
-            ThriftRegistry.rowsCalls.incrementAndGet()
+            counts(0) += 1
             page = service.getRows(split.splitId, split.columns,
               split.maxBytes, Option(page).flatMap(_.nextToken))
             i = 0
@@ -270,24 +239,19 @@ class ThriftReaderFactory(required: StructType)
       override def next(): Seq[Any] = { advance(); val r = page.rows(i); i += 1; r }
     }
 
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = rows.hasNext
-      override def get(): InternalRow = {
-        val r = rows.next()
-        require(r.length == required.fields.length,
-          "graft-thrift: service returned a row of the wrong width")
-        InternalRow.fromSeq(r.zip(required.fields.toSeq).map {
-          case (null, _) => null
-          case (v, f) => f.dataType match {
-            case StringType => UTF8String.fromString(v.toString)
-            case LongType => v.asInstanceOf[Number].longValue()
-            case DoubleType => v.asInstanceOf[Number].doubleValue()
-            case BooleanType => v.asInstanceOf[Boolean]
-            case other => sys.error(s"graft-thrift: bad type $other")
-          }
-        })
-      }
-      override def close(): Unit = ()
+    rows.map { r =>
+      require(r.length == required.fields.length,
+        "graft-thrift: service returned a row of the wrong width")
+      InternalRow.fromSeq(r.zip(required.fields.toSeq).map {
+        case (null, _) => null
+        case (v, f) => f.dataType match {
+          case StringType => UTF8String.fromString(v.toString)
+          case LongType => v.asInstanceOf[Number].longValue()
+          case DoubleType => v.asInstanceOf[Number].doubleValue()
+          case BooleanType => v.asInstanceOf[Boolean]
+          case other => sys.error(s"graft-thrift: bad type $other")
+        }
+      })
     }
   }
 }

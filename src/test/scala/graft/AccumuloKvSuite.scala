@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.AccStore
+import graft.sources.{AccStore, StoreScan}
 
 /** The Accumulo-shaped connector (sources/AccumuloKvConn.scala): the
   * cardinality-driven index-vs-scan planning of
@@ -33,6 +33,12 @@ class AccumuloKvSuite extends GraftSuite {
     }
   }
 
+  /** The scan's index-vs-tablet decision, from its description. */
+  private def planOf(q: org.apache.spark.sql.DataFrame): String = {
+    val text = q.queryExecution.executedPlan.toString
+    " plan=(\\S+) cols=".r.findFirstMatchIn(text).fold(text)(_.group(1))
+  }
+
   private def read(name: String, opts: Map[String, String] = Map.empty) = {
     val r = spark.read.format("graft-accumulo").option("table", name)
     opts.foldLeft(r) { case (acc, (k, v)) => acc.option(k, v) }.load()
@@ -60,14 +66,12 @@ class AccumuloKvSuite extends GraftSuite {
   test("selective predicate plans index splits and visits only hits") {
     val name = "acc_index"
     mkTable(name)
-    val before = AccStore.rowsMaterialized.get()
     val q = read(name).filter(col("kind") === "k7")
-    assert(q.count() == 10) // i % 100 == 7
+    assert(q.collect().length == 10) // i % 100 == 7
     // 10/1000 = .01 <= lowest-cardinality threshold -> that column alone
-    assert(AccStore.lastPlan.get(name).startsWith("index(lowCard(kind)"),
-      AccStore.lastPlan.get(name))
+    assert(planOf(q).startsWith("index(lowCard(kind)"), planOf(q))
     // 10 candidates visited — not the 1000-row table
-    assert(AccStore.rowsMaterialized.get() - before == 10)
+    assert(StoreScan.metric(q, "rowsMaterialized") == 10)
     // pushed filter is fully index-handled: no residual re-filter
     val plan = q.queryExecution.executedPlan.treeString
     assert(plan.contains("PushedFilters"), plan)
@@ -81,21 +85,18 @@ class AccumuloKvSuite extends GraftSuite {
     // intersect (i%4==0 && i%3==0 -> i%12==0 -> 83 rows, ratio .083 < .2)
     val q = read(name).filter(col("grp") === "g0" && col("flag") === true)
     assert(q.count() == 83)
-    assert(AccStore.lastPlan.get(name).startsWith("index(intersect,83/1000"),
-      AccStore.lastPlan.get(name))
+    assert(planOf(q).startsWith("index(intersect,83/1000"), planOf(q))
   }
 
   test("low-card short-circuit skips the intersection, refilters rest") {
     val name = "acc_lowcard"
     mkTable(name)
-    val before = AccStore.rowsMaterialized.get()
     // kind at .01 short-circuits; flag is re-applied store-side to the
     // 10 candidates (i%100==7 && i%3==0: 207, 507, 807)
     val q = read(name).filter(col("kind") === "k7" && col("flag") === true)
-    assert(q.count() == 3)
-    assert(AccStore.lastPlan.get(name).startsWith("index(lowCard(kind)"),
-      AccStore.lastPlan.get(name))
-    assert(AccStore.rowsMaterialized.get() - before == 10)
+    assert(q.collect().length == 3)
+    assert(planOf(q).startsWith("index(lowCard(kind)"), planOf(q))
+    assert(StoreScan.metric(q, "rowsMaterialized") == 10)
   }
 
   test("index abandoned over the threshold; tablet boundaries split") {
@@ -105,8 +106,7 @@ class AccumuloKvSuite extends GraftSuite {
     // flag=true is 333/1000 = .33 >= .2 -> full tablet scan
     val q = read(name).filter(col("flag") === true)
     assert(q.count() == 333)
-    assert(AccStore.lastPlan.get(name).startsWith("tabletScan("),
-      AccStore.lastPlan.get(name))
+    assert(planOf(q).startsWith("tabletScan("), planOf(q))
     assert(q.rdd.getNumPartitions == 4) // 3 boundaries -> 4 tablets
     // a row-id range also chops on the boundaries inside it
     val r = read(name).filter(col("id") > 300L && col("id") <= 800L)
@@ -133,13 +133,12 @@ class AccumuloKvSuite extends GraftSuite {
   test("locality groups: untouched family reads zero cells") {
     val name = "acc_locality"
     mkTable(name)
-    val beforeA = AccStore.cellsFetched(name, "a")
-    val beforeB = AccStore.cellsFetched(name, "b")
     // projection + predicate confined to family "a" (group "meta")
-    assert(read(name).filter(col("grp") === "g1")
-      .select(sum(length(col("kind")))).head().getLong(0) > 0)
-    assert(AccStore.cellsFetched(name, "a") > beforeA)
-    assert(AccStore.cellsFetched(name, "b") == beforeB,
+    val q = read(name).filter(col("grp") === "g1")
+      .select(sum(length(col("kind"))))
+    assert(q.collect()(0).getLong(0) > 0)
+    assert(StoreScan.metric(q, "familyCells.a") > 0)
+    assert(StoreScan.metric(q, "familyCells.b") == 0,
       "family 'b' was read for a family-'a'-only query")
     // row-id column cannot be in a locality group (INVALID_TABLE_PROPERTY)
     val e = intercept[IllegalArgumentException] {
@@ -217,9 +216,8 @@ class AccumuloKvSuite extends GraftSuite {
       .filter(col("tag") === 7) // keeps ids 7, 257, 507, 757
     val joined = read(name).select(col("id"), col("score"))
       .join(broadcast(dim.select(col("id"))), Seq("id"))
-    val before = AccStore.rowsMaterialized.get()
     val rows = joined.collect()
-    val examined = AccStore.rowsMaterialized.get() - before
+    val examined = StoreScan.metric(joined, "rowsMaterialized")
     assert(rows.length == 4)
     // point ranges examine exactly the 4 keys; a full tablet scan
     // would walk all 1000 rows
@@ -251,8 +249,7 @@ class AccumuloKvSuite extends GraftSuite {
     assert(splits.forall(_.isInstanceOf[graft.sources.AccIndexSplit]),
       s"runtime indexed values did not ride the index: " +
         splits.map(_.getClass.getSimpleName).mkString(","))
-    assert(AccStore.lastPlan.get(name).startsWith("index("),
-      AccStore.lastPlan.get(name))
+    assert(scan.description().contains(" plan=index("), scan.description())
     val rf = scan.toBatch.createReaderFactory()
     var n = 0
     splits.foreach { sp =>

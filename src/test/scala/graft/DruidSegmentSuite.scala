@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.DruidStore
+import graft.sources.{DruidStore, StoreScan}
 
 /** The Druid-shaped connector (sources/DruidSegmentConn.scala):
   * segment splits, time-interval segment pruning, dimension filter
@@ -140,9 +140,9 @@ class DruidSegmentSuite extends GraftSuite {
         (col("id") % 120).as("tag"))
       .filter(col("tag") === 65) // keeps ids 65, 185, 305
     val joined = read("dr_runtime").join(broadcast(dim), Seq("__time"))
-    val before = DruidStore.segmentsOpened.get()
-    val n = joined.count()
-    val opened = DruidStore.segmentsOpened.get() - before
+    val counted = joined.groupBy().count()
+    val n = counted.collect()(0).getLong(0)
+    val opened = StoreScan.metric(counted, "segmentsOpened")
     assert(n == 3) // ids 65 (h1), 185 (h3), 305 (h5) all exist
     // three hours' segments read, not six
     assert(opened <= 3, s"runtime filter did not prune: $opened segments")

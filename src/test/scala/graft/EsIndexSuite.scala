@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.EsStore
+import graft.sources.{EsStore, StoreScan}
 
 /** The Elasticsearch-shaped connector (sources/EsIndexConn.scala): the
   * term/range/exists pushdown surface, index-driven (not scan-driven)
@@ -64,12 +64,10 @@ class EsIndexSuite extends GraftSuite {
 
   test("execution is index-driven: only hits materialize") {
     mkIndex("es_mat")
-    val before = EsStore.docsMaterialized.get()
-    val hits = read("es_mat")
-      .filter(col("cat") === "c3" && col("n") <= 50)
-      .collect()
+    val q = read("es_mat").filter(col("cat") === "c3" && col("n") <= 50)
+    val hits = q.collect()
     assert(hits.length == 10) // 3, 8, ..., 48
-    val materialized = EsStore.docsMaterialized.get() - before
+    val materialized = StoreScan.metric(q, "docsMaterialized")
     assert(materialized == 10,
       s"index should materialize 10 hits, not $materialized of 300 docs")
   }
@@ -150,9 +148,8 @@ class EsIndexSuite extends GraftSuite {
       .filter(col("id") === 1)
       .select(col("cat"))
     val joined = read("es_rt").join(broadcast(dim), Seq("cat"))
-    val before = EsStore.docsMaterialized.get()
     val rows = joined.collect()
-    val materialized = EsStore.docsMaterialized.get() - before
+    val materialized = StoreScan.metric(joined, "docsMaterialized")
     assert(rows.length == 60) // i % 5 == 1 of 300
     // without runtime pruning every shard materializes all 300 docs
     assert(materialized == 60,
@@ -185,5 +182,54 @@ class EsIndexSuite extends GraftSuite {
       while (r.next()) n += 1
     }
     assert(n == 120, s"runtime terms should drain 120 hits, got $n")
+  }
+
+  test("concurrent queries each see only their own docsMaterialized") {
+    // two selective queries over ONE index run at the same time from
+    // two threads; each query's metric must equal its own hit count
+    // (a JVM-wide counter read as a before/after delta mixes them)
+    mkIndex("es_conc")
+    val filters =
+      Seq(col("cat") === "c1", col("cat") === "c2" && col("n") <= 150)
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val futures = filters.map { f =>
+        pool.submit(new java.util.concurrent.Callable[(Long, Long)] {
+          override def call(): (Long, Long) = {
+            val runs = (1 to 5).map { _ =>
+              val q = read("es_conc").filter(f)
+              start.await()
+              val hits = q.collect().length.toLong
+              (hits, StoreScan.metric(q, "docsMaterialized"))
+            }
+            assert(runs.distinct.size == 1, runs)
+            runs.head
+          }
+        })
+      }
+      val Seq((hits1, mat1), (hits2, mat2)) = futures.map(_.get())
+      assert(hits1 == 60 && hits2 == 30, (hits1, hits2))
+      assert(mat1 == hits1, s"query 1 materialized $mat1 for $hits1 hits")
+      assert(mat2 == hits2, s"query 2 materialized $mat2 for $hits2 hits")
+    } finally pool.shutdown()
+  }
+
+  test("EXPLAIN ANALYZE shows the pruned scan's connector metric") {
+    // the q2l shape: a selective dim join prunes the es scan at runtime
+    mkIndex("es_explain")
+    read("es_explain").createOrReplaceTempView("es_explain_docs")
+    spark.range(0, 5).select(concat(lit("c"), col("id")).as("cat"),
+      col("id")).createOrReplaceTempView("es_explain_dim")
+    val text = graft.functions.Registry.prestoStatement(spark,
+      """EXPLAIN ANALYZE SELECT /*+ BROADCAST(d) */ count(*) AS n
+        |FROM es_explain_docs e JOIN es_explain_dim d ON e.cat = d.cat
+        |WHERE d.id = 1""".stripMargin)
+      .collect()(0).getString(0)
+    val scanLine = text.linesIterator
+      .find(l => l.startsWith("BatchScan") && l.contains("docsMaterialized"))
+    assert(scanLine.isDefined, text)
+    // runtime pruning: the 60 c1 documents, not all 300
+    assert(scanLine.get.contains("docsMaterialized=60"), scanLine.get)
   }
 }

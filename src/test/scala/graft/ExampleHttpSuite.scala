@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.ExampleHttpStore
+import graft.sources.{ExampleHttpStore, StoreScan}
 
 /** The example-http-shaped connector (sources/ExampleHttpConn.scala):
   * catalog-from-a-document, memoized metadata fetch, split-per-source-
@@ -46,12 +46,15 @@ class ExampleHttpSuite extends GraftSuite {
     assert(df.schema.map(f => (f.name, f.dataType.simpleString)) ==
       Seq(("word", "string"), ("value", "bigint"),
         ("ratio", "double"), ("flag", "boolean")))
-    val before = ExampleHttpStore.fetches.get()
     // several scans over the same handle: data fetches only (3 source
     // docs per scan), no metadata re-fetch
-    assert(df.count() == 5)
-    assert(df.agg(sum(col("value"))).head().getLong(0) == 15L)
-    val metaFetches = ExampleHttpStore.fetches.get() - before
+    val counted = df.groupBy().count()
+    assert(counted.collect()(0).getLong(0) == 5)
+    val summed = df.agg(sum(col("value")))
+    assert(summed.collect()(0).getLong(0) == 15L)
+    val metaFetches = Seq(counted, summed).map(q =>
+      StoreScan.metric(q, "fetches") +
+        StoreScan.metric(q, "metadataFetches")).sum
     assert(metaFetches == 6, s"expected 6 data fetches, saw $metaFetches")
   }
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.KuduStore
+import graft.sources.{KuduStore, StoreScan}
 
 /** The Kudu-shaped connector (sources/KuduTabletConn.scala): the
   * tablet-grid scan-token split model with hash + range pruning,
@@ -71,9 +71,9 @@ class KuduTabletSuite extends GraftSuite {
     assert(in.rdd.getNumPartitions <= 3)
     assert(in.count() == 3)
     // predicate evaluation is tablet-side: only the pruned tablet scans
-    val before = KuduStore.rowsScanned.get()
-    assert(read(name).filter(col("id") === 42L).count() == 1)
-    val delta = KuduStore.rowsScanned.get() - before
+    val point = read(name).filter(col("id") === 42L)
+    assert(point.collect().length == 1)
+    val delta = StoreScan.metric(point, "rowsScanned")
     assert(delta < 400, s"scanned $delta rows — pruning did not happen")
   }
 
@@ -181,9 +181,8 @@ class KuduTabletSuite extends GraftSuite {
       .select(col("id"), (col("id") % 50).as("tag"))
       .filter(col("tag") === 7) // keeps ids 7 and 57
     val joined = read(name).join(broadcast(dim), Seq("id"))
-    val before = KuduStore.rowsScanned.get()
     val rows = joined.collect()
-    val scanned = KuduStore.rowsScanned.get() - before
+    val scanned = StoreScan.metric(joined, "rowsScanned")
     assert(rows.length == 2)
     // ids 7 and 57 land in at most 2 of the 4 buckets (~100 rows
     // each): roughly half the table is scanned; without runtime

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.PinotStore
+import graft.sources.{PinotStore, StoreScan}
 
 /** The Pinot-shaped connector (sources/PinotBrokerConn.scala): the
   * broker-vs-segment split choice, COMPLETE aggregate pushdown (the
@@ -48,12 +48,11 @@ class PinotBrokerSuite extends GraftSuite {
     // answered finals (the opposite of the Druid analog's partial mode)
     assert(!plan.contains("HashAggregate"), plan)
     assert(plan.contains("mode=broker"), plan)
-    val before = PinotStore.rowsReturned.get()
     // sort in the test, not the plan: an orderBy would add a range-
     // partitioning sampling pass that reads the scan twice
     val rows = q.collect().sortBy(_.getString(0))
     // only the 3 FINAL group rows crossed the store boundary
-    assert(PinotStore.rowsReturned.get() - before == 3)
+    assert(StoreScan.metric(q, "rowsReturned") == 3)
     assert(rows.map(_.getString(0)).toSeq == Seq("k0", "k1", "k2"))
     assert(rows.map(_.getLong(1)).toSeq == Seq(100L, 100L, 100L))
     assert(rows.map(_.getLong(2)).toSeq == Seq(15150L, 14950L, 15050L))
@@ -77,9 +76,8 @@ class PinotBrokerSuite extends GraftSuite {
     assert(!plan.contains("HashAggregate") && !plan.contains("Expand"),
       plan)
     assert(plan.contains("mode=broker"), plan)
-    val before = PinotStore.rowsReturned.get()
     val rows = q.collect().sortBy(_.getString(0))
-    assert(PinotStore.rowsReturned.get() - before == 3)
+    assert(StoreScan.metric(q, "rowsReturned") == 3)
     // scores are all distinct (i*1.0) -> nd == n per group
     assert(rows.map(_.getLong(1)).toSeq == Seq(100L, 100L, 100L))
     assert(rows.map(_.getLong(2)).toSeq == Seq(100L, 100L, 100L))
@@ -99,9 +97,9 @@ class PinotBrokerSuite extends GraftSuite {
       plan)
     assert(plan.contains("PushedTopN: true"), plan)
     assert(q.rdd.getNumPartitions == 1) // the single broker split
-    val before = PinotStore.rowsReturned.get()
-    val ids = q.select("id").collect().map(_.getLong(0)).toSeq
-    assert(PinotStore.rowsReturned.get() - before == 5)
+    val ids5 = q.select("id")
+    val ids = ids5.collect().map(_.getLong(0)).toSeq
+    assert(StoreScan.metric(ids5, "rowsReturned") == 5)
     assert(ids == Seq(300L, 299L, 298L, 297L, 296L))
     // with a pushed filter the store applies WHERE before ORDER BY
     val f = read(name).filter(col("kind") === "k1")
@@ -117,10 +115,9 @@ class PinotBrokerSuite extends GraftSuite {
     assert(q.queryExecution.executedPlan.treeString.contains(
       "PushedLimit: true"))
     assert(q.rdd.getNumPartitions == 1)
-    val before = PinotStore.rowsReturned.get()
     assert(q.collect().length == 7)
     // only the capped rows crossed the boundary
-    assert(PinotStore.rowsReturned.get() - before == 7)
+    assert(StoreScan.metric(q, "rowsReturned") == 7)
   }
 
   test("predicates apply store-side; unsupported ones stay residual") {

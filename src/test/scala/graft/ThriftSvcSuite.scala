@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.{GraftThriftService, InMemoryThriftService, ThriftRegistry}
+import graft.sources.{GraftThriftService, InMemoryThriftService, StoreScan, ThriftRegistry}
 
 /** The Thrift-shaped connector (sources/ThriftSvcConn.scala): full
   * service delegation — paged split discovery via continuation tokens,
@@ -53,10 +53,11 @@ class ThriftSvcSuite extends GraftSuite {
       "max_split_count", "10"))
     val table = new graft.sources.ThriftSvcTable(opts)
     val scan = table.newScanBuilder(opts).build()
-    val before = ThriftRegistry.splitCalls.get()
     val parts = scan.toBatch.planInputPartitions()
     assert(parts.length == 25)
-    assert(ThriftRegistry.splitCalls.get() - before == 3)
+    assert(scan.reportDriverMetrics()
+      .collectFirst { case m if m.name == "splitCalls" => m.value } ==
+      Some(3L))
     val df = read("th_splits", Map("max_split_count" -> "10"))
     assert(df.rdd.getNumPartitions == 25)
     assert(df.count() == 2500)
@@ -67,9 +68,9 @@ class ThriftSvcSuite extends GraftSuite {
     // the sum prunes to 1 column: 6400B / 128B -> 50 rows/page -> 20
     // pages chained by token; every row intact across page boundaries
     val df = read("th_pages", Map("max_response_bytes" -> "6400"))
-    val before = ThriftRegistry.rowsCalls.get()
-    assert(df.agg(sum(col("id"))).head().getLong(0) == 500500L)
-    val calls = ThriftRegistry.rowsCalls.get() - before
+    val summed = df.agg(sum(col("id")))
+    assert(summed.collect()(0).getLong(0) == 500500L)
+    val calls = StoreScan.metric(summed, "rowsCalls")
     assert(calls == 20, s"expected 20 pages, saw $calls")
     assert(df.count() == 1000)
   }
